@@ -51,9 +51,11 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * serves, which is exactly the serve ≪ build row the bench exists to
   * show.
   *
-  * Serving is a plain `spark.read.parquet`: predicate pushdown, column
-  * pruning and broadcast decisions all apply to the artifact as to any
-  * table, and nothing about the artifact path is driver-resident.
+  * Serving is a plain parquet scan over the committed payload files
+  * ([[CommittedParquet]] — no listing or schema job): predicate
+  * pushdown, column pruning and broadcast decisions all apply to the
+  * artifact as to any table, and nothing about the artifact path is
+  * driver-resident.
   */
 object ArtifactStore {
 
@@ -509,9 +511,8 @@ object ArtifactStore {
       case None => build
       case Some(r) =>
         val scopeDir = s"$r/$name/${scope(sourceKey, params)}"
-        spark.read.parquet(
-          ensureCommitted(r, scopeDir, fp, name, params,
-            logCfg(spark))(build))
+        readPayloads(spark, Seq(ensureCommitted(r, scopeDir, fp, name,
+          params, logCfg(spark))(build)))
     }
 
   private def scope(sourceKey: String, params: String): String =
@@ -656,9 +657,16 @@ object ArtifactStore {
             .map(p => s"${p._1}:${p._2}").mkString("|")),
           params, if (willCommit) "build" else "serve", cfg,
           extra = s""","parts":${parts.size},"built":$toBuild""")
-        spark.read.parquet(paths: _*)
+        readPayloads(spark, paths)
     }
   }
+
+  /** Serve read: the committed payload dirs' files, listed on the
+    * driver and read with no listing or schema job. */
+  private def readPayloads(spark: SparkSession,
+                           payloadDirs: Seq[String]): DataFrame =
+    CommittedParquet.read(spark,
+      payloadDirs.flatMap(d => CommittedParquet.dataFiles(Paths.get(d))))
 
   /** Drop part dirs whose partId left the caller's part set — only
     * ever touches `<scope>/parts/part-*`, so other corpora/params of

@@ -186,18 +186,17 @@ object Inventory {
     val bBehind = withBucket
       .filter(col("bucket").isin(behind.map(x => x: Any): _*))
       .drop("bucket")
-    // partition-pruned prior read: only the behind buckets' CURRENT
-    // versions are opened (older versions awaiting vacuum are skipped).
-    // The read lists the version-LEAF directories explicitly (basePath
-    // keeps the partition columns) rather than scanning the table root
-    // with a filter: same rows, and the write below then targets a
+    // prior read: only the behind buckets' CURRENT versions are opened
+    // (older versions awaiting vacuum are skipped). The driver lists
+    // those version-LEAF directories itself and [[CommittedParquet]]
+    // reads exactly their files (table root as base, so the partition
+    // columns are the ones a root scan yields): no listing or schema
+    // job runs before the merge, and the write below targets a
     // DIFFERENT root path than any input relation, so the merge+write
-    // run as ONE job — the localCheckpoint that existed only to break
-    // the read-your-own-output-path rule is gone (one fewer serialized
-    // job and no extra materialization per inventory merge). MVCC
-    // makes the overlap safe: the write creates only NEW
-    // (bucket, merged_height) version dirs, never touching the leaf
-    // files being read.
+    // run as ONE job — no localCheckpoint to break the
+    // read-your-own-output-path rule. MVCC makes the overlap safe:
+    // the write creates only NEW (bucket, merged_height) version
+    // dirs, never touching the leaf files being read.
     val priorPairs = behind.toSeq
       .flatMap(bk => bucketHeights.get(bk).map(bk -> _))
     // the one-job merge+write overlap below is safe ONLY because the
@@ -211,9 +210,7 @@ object Inventory {
         "assumption the single-job merge rests on is violated")
     val priorBehind =
       if (priorPairs.isEmpty) None
-      else Some(spark.read.option("basePath", stateDir).parquet(
-          priorPairs.map { case (bk, v) =>
-            s"$stateDir/bucket=$bk/merged_height=$v" }: _*)
+      else Some(readVersions(spark, stateDir, priorPairs)
         .drop("bucket", "merged_height"))
     // state and batch agree on the hash, so the merge re-derives the
     // bucket from the key — no cross-bucket movement possible.
@@ -247,9 +244,8 @@ object Inventory {
     val fps = ArtifactStore.observedPartFingerprints(merged, "bucket",
         behind.toSeq, dataCols)(writeMerged)
       .getOrElse {
-        val back = spark.read.option("basePath", stateDir).parquet(
-          behind.map(bk =>
-            s"$stateDir/bucket=$bk/merged_height=$mergedHeight"): _*)
+        val back = readVersions(spark, stateDir,
+          behind.toSeq.map(_ -> mergedHeight))
         ArtifactStore.partFingerprints(back, "bucket", dataCols)
           .map { case (pid, fp) =>
             pid.stripPrefix("bucket=").toInt -> fp }
@@ -260,6 +256,16 @@ object Inventory {
     }
     true
   }
+
+  /** The `(bucket, merged_height)` version leaves `versions` of a
+    * bucketed store as one frame over their files, the layout kept as
+    * partition columns (`basePath` = the store root). */
+  private def readVersions(spark: SparkSession, stateDir: String,
+                           versions: Seq[(Int, Long)]): DataFrame =
+    CommittedParquet.read(spark,
+      versions.flatMap { case (bk, v) => CommittedParquet.dataFiles(
+        Paths.get(s"$stateDir/bucket=$bk/merged_height=$v")) },
+      Some(stateDir))
 
   private val StatePartIdRe = """bucket=(\d+)\.mh=(\d+)""".r
 
@@ -297,7 +303,8 @@ object Inventory {
   def readStatePart(spark: SparkSession, stateDir: String,
                     pid: String): DataFrame = pid match {
     case StatePartIdRe(bk, mh) =>
-      spark.read.parquet(s"$stateDir/bucket=$bk/merged_height=$mh")
+      CommittedParquet.read(spark, CommittedParquet.dataFiles(
+        Paths.get(s"$stateDir/bucket=$bk/merged_height=$mh")))
     case _ => throw new IllegalStateException(
       s"unparseable inventory part id '$pid' — expected bucket=<n>.mh=<h>")
   }
@@ -363,10 +370,6 @@ object Inventory {
       vs.filter(_ <= committed).sorted.lastOption.map(bk -> _)
     }
     require(pairs.nonEmpty, s"no committed state at $stateDir")
-    spark.read.parquet(stateDir)
-      .filter(pairs.map { case (bk, v) =>
-        col("bucket") === bk && col("merged_height") === v
-      }.reduce(_ || _))
-      .drop("bucket", "merged_height")
+    readVersions(spark, stateDir, pairs).drop("bucket", "merged_height")
   }
 }

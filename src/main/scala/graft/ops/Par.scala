@@ -11,6 +11,10 @@ package graft.ops
   *    would then race the failed attempt's stragglers into the same
   *    table directories. The crash-recovery protocols model process
   *    DEATH (no straggler survives), not a half-abandoned thread pool.
+  *    That holds when the CALLER is interrupted too (a streaming
+  *    query's `stop()` interrupts the thread running its batch): the
+  *    wait goes on until every task settles, then the interrupt is
+  *    rethrown — so once `stop()` returns no task is still writing;
   *  - after all tasks settle, the FIRST failure (by item order) is
   *    rethrown, so callers keep sequential-like error behavior;
   *  - results preserve item order.
@@ -25,8 +29,17 @@ object Par {
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     try {
       val futs = items.map(a => scala.concurrent.Future(scala.util.Try(f(a))))
-      val settled = futs.map(fut => scala.concurrent.Await.result(
-        fut, scala.concurrent.duration.Duration.Inf))
+      var interrupted = false
+      val settled = futs.map { fut =>
+        var r: Option[scala.util.Try[B]] = None
+        while (r.isEmpty)
+          try r = Some(scala.concurrent.Await.result(
+            fut, scala.concurrent.duration.Duration.Inf))
+          catch { case _: InterruptedException => interrupted = true }
+        r.get
+      }
+      if (interrupted) throw new InterruptedException(
+        "interrupted while Par.run's tasks ran; all of them have settled")
       settled.collectFirst { case scala.util.Failure(e) => throw e }
       settled.map(_.get)
     } finally pool.shutdown()

@@ -1,13 +1,13 @@
 package graft.streaming
 
 import graft.domain.{AccountLedger, Actors, OuiLedger, Ver}
-import graft.ops.Inventory
+import graft.ops.{CommittedParquet, Inventory}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 /** Ordered block-ingest driver v1 — the Spark shape of the reference's
   * follower (ref: src/be_db_follower.erl:86-108; height continuity
@@ -286,12 +286,17 @@ object BlockIngest {
             array().cast("array<struct<gateway:string,scale:double>>")),
           g => g("gateway").isNotNull)
         else lit(false)
+      // a block without a `transactions` key has a NULL array, whose
+      // size is NULL under ANSI — it counts zero transactions, and the
+      // non-null Long decode below must not abort the whole batch
+      def txnCount(txns: org.apache.spark.sql.Column) =
+        coalesce(size(txns).cast("long"), lit(0L))
       val hrows = fresh.select(col("height"), col("time"), snapCol,
-          size(col("transactions")).cast("long"),
-          size(filter(col("transactions"),
-            t => t("type") === "consensus_group_v1")).cast("long"),
-          size(filter(col("transactions"),
-            t => t("type") === "poc_request_v1")).cast("long"),
+          txnCount(col("transactions")),
+          txnCount(filter(col("transactions"),
+            t => t("type") === "consensus_group_v1")),
+          txnCount(filter(col("transactions"),
+            t => t("type") === "poc_request_v1")),
           scalesCol)
         .as[(Long, Long, Option[String], Long, Long, Long, Boolean)]
         .collect()
@@ -737,10 +742,10 @@ object BlockIngest {
     // gateways: guard on the carried reward scale. "Stored" = latest
     // log entry per gateway at or below the committed watermark — a
     // replay after a crash sees exactly what the first attempt saw.
-    val scalesDir = s"$sinkDir/gateway_scales"
-    val stored = if (Files.exists(Paths.get(scalesDir)))
-      spark.read.parquet(scalesDir)
-        .filter(col("slice") <= committed && col("block") <= committed)
+    val scaleLeaves = committedFactLeaves(sinkDir, "gateway_scales", committed)
+    val stored = if (scaleLeaves.nonEmpty)
+      readFactLeaves(spark, sinkDir, "gateway_scales", scaleLeaves)
+        .filter(col("block") <= committed)
         .groupBy(col("actor"))
         .agg(max_by(col("scale"), col("block")).as("stored_scale"))
     else spark.createDataFrame(
@@ -832,8 +837,8 @@ object BlockIngest {
         val present = buckets.map(b => b -> s"$dir/hb=$b/slice=$slice")
           .filter { case (_, d) => Files.exists(Paths.get(d)) }
         if (present.nonEmpty) {
-          val back = spark.read.option("basePath", dir)
-            .parquet(present.map(_._2): _*)
+          val back = readFactLeaves(spark, sinkDir, table,
+            present.map { case (b, _) => b -> slice })
           val dataCols = back.columns.filterNot(c =>
             c == "hb" || c == "slice").toSeq
           graft.ops.ArtifactStore.partFingerprints(back, "hb", dataCols)
@@ -847,16 +852,19 @@ object BlockIngest {
   }
 
   /** Committed `(hb, slice)` leaves of a fact table, from the data
-    * layout — the ground truth the sidecars describe. */
-  private def committedFactLeaves(sinkDir: String, table: String,
-                                  h: Long): Seq[(Long, Long)] = {
+    * layout — the ground truth the sidecars describe. Only the bucket
+    * directories `bucket` admits are opened. */
+  private def committedFactLeaves(sinkDir: String, table: String, h: Long,
+                                  bucket: Long => Boolean = _ => true)
+      : Seq[(Long, Long)] = {
     val root = Paths.get(s"$sinkDir/$table")
     if (!Files.isDirectory(root)) return Seq.empty
     graft.ops.Fs.ls(root)
       .filter(p => Files.isDirectory(p) &&
         p.getFileName.toString.startsWith("hb="))
-      .flatMap { hbDir =>
-        val b = hbDir.getFileName.toString.stripPrefix("hb=").toLong
+      .map(p => p -> p.getFileName.toString.stripPrefix("hb=").toLong)
+      .filter { case (_, b) => bucket(b) }
+      .flatMap { case (hbDir, b) =>
         graft.ops.Fs.ls(hbDir)
           .filter(p => Files.isDirectory(p) &&
             p.getFileName.toString.startsWith("slice="))
@@ -865,6 +873,33 @@ object BlockIngest {
           .filter(_._2 <= h)
       }.sorted
   }
+
+  /** Fact-table `(hb, slice)` leaves as one frame over their files,
+    * `hb`/`slice` kept as partition columns (`basePath` = the table
+    * root) — the files come from the driver's listing, so no Spark job
+    * runs before the query. An empty `leaves` reads as an empty frame
+    * with the schema of the table's first leaf. */
+  private def readFactLeaves(spark: SparkSession, sinkDir: String,
+                             table: String,
+                             leaves: Seq[(Long, Long)]): DataFrame =
+    readFactFiles(spark, sinkDir, table,
+      factLeafFiles(sinkDir, table, leaves))
+
+  /** Data files of the given `(hb, slice)` leaves, from the driver's
+    * java.nio listing. */
+  private def factLeafFiles(sinkDir: String, table: String,
+                            leaves: Seq[(Long, Long)]): Seq[Path] =
+    leaves.flatMap { case (b, s) => CommittedParquet.dataFiles(
+      Paths.get(s"$sinkDir/$table/hb=$b/slice=$s")) }
+
+  /** [[readFactLeaves]] over an already-listed file set. */
+  private def readFactFiles(spark: SparkSession, sinkDir: String,
+                            table: String, files: Seq[Path]): DataFrame =
+    CommittedParquet.read(spark, files, Some(s"$sinkDir/$table"),
+      schemaFile = if (files.nonEmpty) None
+        else committedFactLeaves(sinkDir, table, Long.MaxValue)
+          .iterator.flatMap(l => factLeafFiles(sinkDir, table, Seq(l)))
+          .nextOption())
 
   /** The committed (bucket partId → folded fingerprint) map of a fact
     * table — the `parts` input for a part-addressed artifact over the
@@ -903,7 +938,8 @@ object BlockIngest {
           // heal-write: recompute from the leaf (leaf-sized scan) and
           // persist, so the next read is metadata-only again
           val healed = graft.ops.ArtifactStore.partFingerprint(
-            readFactLeaf(spark, sinkDir, table, b, s))
+            readFactLeaves(spark, sinkDir, table, Seq(b -> s))
+              .drop("hb", "slice"))
           graft.ops.ArtifactStore.writeFpPart(dir, pid, healed)
           healed
         })
@@ -914,14 +950,6 @@ object BlockIngest {
     }
   }
 
-  /** One `(hb, slice)` leaf on the canonical hash basis (data columns
-    * in written order — hb/slice dropped). */
-  private def readFactLeaf(spark: SparkSession, sinkDir: String,
-                           table: String, b: Long, s: Long): DataFrame =
-    spark.read.option("basePath", s"$sinkDir/$table")
-      .parquet(s"$sinkDir/$table/hb=$b/slice=$s")
-      .drop("hb", "slice")
-
   /** Canonical reader of ONE committed bucket part (`hb=B`) — exactly
     * the rows its folded sidecar fingerprint hashes (data columns in
     * written order). The `buildPart` reader for part-addressed
@@ -930,9 +958,9 @@ object BlockIngest {
                    pid: String): DataFrame = {
     require(pid.startsWith("hb=") && !pid.contains("."),
       s"fact part ids are buckets (hb=<long>), got '$pid'")
-    spark.read.option("basePath", s"$sinkDir/$table")
-      .parquet(s"$sinkDir/$table/$pid")
-      .where(col("slice") <= committedHeight(sinkDir))
+    val b = pid.stripPrefix("hb=").toLong
+    readFactLeaves(spark, sinkDir, table,
+      committedFactLeaves(sinkDir, table, committedHeight(sinkDir), _ == b))
       .drop("hb", "slice")
   }
 
@@ -941,25 +969,23 @@ object BlockIngest {
     * sidecar fold equals a full scan of (spec-pinned). */
   def readFactCommitted(spark: SparkSession, sinkDir: String,
                         table: String): DataFrame =
-    spark.read.option("basePath", s"$sinkDir/$table")
-      .parquet(s"$sinkDir/$table")
-      .where(col("slice") <= committedHeight(sinkDir))
+    readFactLeaves(spark, sinkDir, table,
+      committedFactLeaves(sinkDir, table, committedHeight(sinkDir)))
       .drop("hb", "slice")
 
-  /** Committed height-range read with BUCKET-directory pruning: the
-    * hb predicate prunes at the directory level (a 1.5M-block chain
-    * reads range/K bucket dirs, not the table), the height predicate
-    * prunes row groups inside the surviving buckets via parquet
-    * min/max stats. */
+  /** Committed height-range read with BUCKET-directory pruning: only
+    * the range's bucket directories are listed and read (a 1.5M-block
+    * chain reads range/K bucket dirs, not the table), the height
+    * predicate prunes row groups inside them via parquet min/max
+    * stats. */
   def readFactRange(spark: SparkSession, sinkDir: String, table: String,
                     loHeight: Long, hiHeight: Long): DataFrame = {
     val k = factBucketBlocks(sinkDir).getOrElse(DefaultBucketBlocks)
     val heightCol = factTables.toMap.apply(table)
-    spark.read.option("basePath", s"$sinkDir/$table")
-      .parquet(s"$sinkDir/$table")
-      .where(col("hb").between(loHeight / k, hiHeight / k) &&
-        col("slice") <= committedHeight(sinkDir) &&
-        col(heightCol).between(loHeight, hiHeight))
+    readFactLeaves(spark, sinkDir, table,
+      committedFactLeaves(sinkDir, table, committedHeight(sinkDir),
+        b => b >= loHeight / k && b <= hiHeight / k))
+      .where(col(heightCol).between(loHeight, hiHeight))
       .drop("hb", "slice")
   }
 
@@ -1033,13 +1059,11 @@ object BlockIngest {
           val old = Paths.get(s"$dir/.compact-old-hb=$b")
           graft.ops.Fs.deleteRec(Paths.get(tmp))
           // 1. folded payload, file count by committed-byte quota
-          val bytes = slices.map(s =>
-            filesUnder(Paths.get(s"$dir/hb=$b/slice=$s"))
-              .map(Files.size(_)).sum).sum
+          val files = factLeafFiles(sinkDir, table, leaves)
+          val bytes = files.map(Files.size(_)).sum
           val target = graft.ops.DeltaPartsStore.CompactTargetBytes
           val nf = math.max(1L, (bytes + target - 1) / target).toInt
-          val union = spark.read.option("basePath", dir)
-            .parquet(slices.map(s => s"$dir/hb=$b/slice=$s"): _*)
+          val union = readFactFiles(spark, sinkDir, table, files)
             .drop("hb", "slice")
           // folded sidecar basis = the rewritten rows: the observe
           // metric hashes the written evaluation itself (one job,
@@ -1167,7 +1191,9 @@ object BlockIngest {
     // superseded versions are vacuumed after the commit point
     val prior: Map[String, Long] = statsVersions(statsDir).sorted.lastOption
       .map { v =>
-        spark.read.parquet(s"$statsDir/h=$v").collect()
+        CommittedParquet.read(spark,
+            CommittedParquet.dataFiles(Paths.get(s"$statsDir/h=$v")))
+          .collect()
           .map(r => r.getAs[String]("name") -> r.getAs[Long]("value")).toMap
       }.getOrElse(Map.empty)
     if (prior.getOrElse("_merged_height", 0L) >= newCommitted) return
@@ -1210,23 +1236,6 @@ object BlockIngest {
     }
   }
 
-  /** Data files under `p` (skipping `_`/`.` markers AND metadata
-    * directories — the `_fp` fingerprint sidecars live inside the
-    * table dir, so every path SEGMENT below the root must be a data
-    * segment or the commit manifest would list sidecar JSON as
-    * parquet) — the driver-side java.nio walk the store's listing
-    * helpers share. */
-  private def filesUnder(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    import scala.jdk.CollectionConverters._
-    if (!Files.exists(p)) Seq.empty
-    else graft.ops.Fs.walk(p)
-      .filter(f => Files.isRegularFile(f) &&
-        p.relativize(f).iterator().asScala.forall { s =>
-          val n = s.toString
-          !n.startsWith("_") && !n.startsWith(".")
-        })
-  }
-
   /** List a table's live data files as of `height`, relative to
     * `sinkDir` (driver-side java.nio walk — the local stand-in for the
     * Hadoop FileSystem listing a cluster deployment would use).
@@ -1236,11 +1245,12 @@ object BlockIngest {
     def rel(f: java.nio.file.Path): String =
       Paths.get(sinkDir).relativize(f).toString
     val facts = factTables.map { case (table, _) =>
-      val fs = filesUnder(Paths.get(s"$sinkDir/$table")).filter { f =>
+      val root = Paths.get(s"$sinkDir/$table")
+      val fs = CommittedParquet.dataFiles(root).filter { f =>
         // keep only slices at or below the commit height (a torn
         // later batch can only have added HIGHER slices, and a slice
         // carries no block above its own height)
-        val part = Paths.get(s"$sinkDir/$table").relativize(f)
+        val part = root.relativize(f)
           .iterator().asScala.map(_.toString)
           .find(_.startsWith("slice="))
         part.forall(_.stripPrefix("slice=").toLong <= height)
@@ -1254,8 +1264,9 @@ object BlockIngest {
           vs.filter(_ <= height).sorted.lastOption.map(v =>
             s"bucket=$bk/merged_height=$v")
         }.toSet
-      val fs = filesUnder(Paths.get(stateDir)).filter { f =>
-        val segs = Paths.get(stateDir).relativize(f)
+      val root = Paths.get(stateDir)
+      val fs = CommittedParquet.dataFiles(root).filter { f =>
+        val segs = root.relativize(f)
           .iterator().asScala.map(_.toString).toSeq
         segs.length >= 3 && live.contains(s"${segs(0)}/${segs(1)}")
       }
@@ -1265,7 +1276,7 @@ object BlockIngest {
       val statsDir = s"$sinkDir/stats_inventory"
       val keep = statsVersions(statsDir).filter(_ <= height).sorted.lastOption
       "stats_inventory" -> keep.toSeq.flatMap(v =>
-        filesUnder(Paths.get(s"$statsDir/h=$v")).map(rel))
+        CommittedParquet.dataFiles(Paths.get(s"$statsDir/h=$v")).map(rel))
     }
     (facts ++ invs :+ stats).toMap
   }
@@ -1295,19 +1306,26 @@ object BlockIngest {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Every file a commit manifest references (all tables), sink-dir
-    * relative. */
-  private def manifestFiles(spark: SparkSession, sinkDir: String,
-                            h: Long): Seq[String] = {
-    val manifest = new String(Files.readAllBytes(
-      Paths.get(s"$sinkDir/_commits/$h.json")), "UTF-8")
-    val schema = StructType(Seq(
-      StructField("height", LongType),
-      StructField("tables", MapType(StringType, ArrayType(StringType)))))
-    import spark.implicits._
-    spark.read.schema(schema).json(Seq(manifest).toDS()).head()
-      .getAs[Map[String, scala.collection.Seq[String]]]("tables")
-      .values.flatten.toSeq
+  private val manifestJson = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** A commit manifest's (table → sink-relative files) map, parsed on
+    * the driver — the one parser every manifest reader shares. A
+    * manifest of any other shape fails LOUDLY. */
+  private def manifestTables(sinkDir: String,
+                             h: Long): Map[String, Seq[String]] = {
+    import scala.jdk.CollectionConverters._
+    val path = Paths.get(s"$sinkDir/_commits/$h.json")
+    def bad(why: String) =
+      throw new IllegalStateException(s"malformed commit manifest $path: $why")
+    val tables = manifestJson.readTree(Files.readAllBytes(path)).get("tables")
+    if (tables == null || !tables.isObject) bad("no \"tables\" object")
+    tables.properties().asScala.map { e =>
+      if (!e.getValue.isArray) bad(s"table ${e.getKey} is not a file list")
+      e.getKey -> e.getValue.asScala.toSeq.map { f =>
+        if (!f.isTextual) bad(s"table ${e.getKey} lists a non-string file")
+        f.textValue
+      }
+    }.toMap
   }
 
   /** Orphan-file AUDIT — the VACUUM story for the commit-manifest
@@ -1331,18 +1349,17 @@ object BlockIngest {
     *
     * Returns (sink-relative path, table, status).
     */
-  def auditOrphans(spark: SparkSession, sinkDir: String)
-      : Seq[(String, String, String)] = {
+  def auditOrphans(sinkDir: String): Seq[(String, String, String)] = {
     import scala.jdk.CollectionConverters._
     val watermark = committedHeight(sinkDir)
     val referenced: Set[String] = manifestHeights(sinkDir)
-      .flatMap(h => manifestFiles(spark, sinkDir, h)).toSet
+      .flatMap(h => manifestTables(sinkDir, h).values.flatten).toSet
     val versionPrefixes =
       Seq("slice", "merged_height", "h").map(_ + "=")
     val allTables =
       factTables.map(_._1) ++ inventoryTables :+ "stats_inventory"
     allTables.flatMap { table =>
-      filesUnder(Paths.get(s"$sinkDir/$table")).map { f =>
+      CommittedParquet.dataFiles(Paths.get(s"$sinkDir/$table")).map { f =>
         val rel = Paths.get(sinkDir).relativize(f).toString
         val status =
           if (referenced(rel)) "live"
@@ -1364,8 +1381,8 @@ object BlockIngest {
     * deleted paths. `live` and `pending` are never touched — the spec
     * pins that every committed snapshot (including time travel across
     * the retained window) reads identically after the vacuum. */
-  def vacuumOrphans(spark: SparkSession, sinkDir: String): Seq[String] = {
-    val orphans = auditOrphans(spark, sinkDir)
+  def vacuumOrphans(sinkDir: String): Seq[String] = {
+    val orphans = auditOrphans(sinkDir)
       .collect { case (f, _, "orphan") => f }
     orphans.foreach(f => Files.deleteIfExists(Paths.get(s"$sinkDir/$f")))
     orphans
@@ -1405,22 +1422,17 @@ object BlockIngest {
 
   private def resolveManifest(spark: SparkSession, sinkDir: String,
                               h: Long, table: String): DataFrame = {
-    val manifest = new String(Files.readAllBytes(
-      Paths.get(s"$sinkDir/_commits/$h.json")), "UTF-8")
-    val schema = StructType(Seq(
-      StructField("height", LongType),
-      StructField("tables", MapType(StringType, ArrayType(StringType)))))
-    import spark.implicits._
-    val parsed = spark.read.schema(schema).json(Seq(manifest).toDS()).head()
-    val files = parsed.getAs[Map[String, scala.collection.Seq[String]]]("tables")
-      .getOrElse(table,
-        sys.error(s"table $table not in commit manifest $h")).toSeq
+    val files = manifestTables(sinkDir, h).getOrElse(table,
+      sys.error(s"table $table not in commit manifest $h"))
     require(files.nonEmpty, s"table $table is empty in commit manifest $h")
-    // facts: the hb/slice partition columns are physical layout, not
-    // schema — dropped so a committed read keeps the reference shape
-    // (a no-op for the inventory/stats tables, which don't carry them)
-    spark.read.option("basePath", s"$sinkDir/$table")
-      .parquet(files.map(f => s"$sinkDir/$f"): _*)
+    // the manifest's own file list, read with the table root as base:
+    // each table keeps its layout directories as partition columns —
+    // `bucket`/`merged_height` for the inventories, `h` for stats.
+    // Only the facts' hb/slice are dropped, so a committed fact read
+    // keeps the reference shape; inventory/stats callers drop their
+    // layout columns themselves
+    CommittedParquet.read(spark, files.map(f => Paths.get(s"$sinkDir/$f")),
+        Some(s"$sinkDir/$table"))
       .drop("hb", "slice")
   }
 

@@ -1,11 +1,12 @@
 package graft
 
 import graft.domain.{AccountLedger, Actors, OuiLedger}
+import graft.ops.CommittedParquet
 import graft.streaming.BlockIngest
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** Golden end-to-end ingest over the committed block fixtures: full
   * drain, idempotent replay, and the strict-order assertion.
@@ -403,7 +404,7 @@ class BlockIngestSpec extends SparkSpec {
     val junk = leaf1.resolve("part-99999-planted-junk.parquet")
     java.nio.file.Files.copy(src, junk)
 
-    val audit = BlockIngest.auditOrphans(spark, sink)
+    val audit = BlockIngest.auditOrphans(sink)
     val byStatus = audit.groupBy(_._3).view.mapValues(_.map(_._1)).toMap
     assert(byStatus("orphan") ===
       Seq(s"blocks/hb=0/slice=40/${junk.getFileName}"),
@@ -420,7 +421,7 @@ class BlockIngestSpec extends SparkSpec {
       BlockIngest.readCommitted(spark, sink, "account_inventory")
         .drop("bucket", "merged_height").orderBy("address").collect().toSeq)
     val before = snap()
-    val deleted = BlockIngest.vacuumOrphans(spark, sink)
+    val deleted = BlockIngest.vacuumOrphans(sink)
     assert(deleted === byStatus("orphan"))
     assert(!java.nio.file.Files.exists(junk), "orphan must be deleted")
     assert(snap() === before,
@@ -433,8 +434,74 @@ class BlockIngestSpec extends SparkSpec {
     assert(BlockIngest.committedHeight(sink) === 60L)
     // post-replay the store is fully clean: nothing orphan, nothing
     // pending (dynamic overwrite superseded the torn files in place)
-    val after = BlockIngest.auditOrphans(spark, sink)
+    val after = BlockIngest.auditOrphans(sink)
     assert(after.forall(_._3 == "live"),
       s"non-live after replay: ${after.filter(_._3 != "live").take(5)}")
+  }
+
+  /** Blocks as the follower's JSON lines carry them. */
+  private def jsonBlocks(lines: String*): DataFrame =
+    spark.read.schema(BlockIngest.blockSchema).json(lines.toDS())
+
+  private def committedStats(sink: String): Map[String, Long] =
+    BlockIngest.readCommitted(spark, sink, "stats_inventory").collect()
+      .map(r => r.getAs[String]("name") -> r.getAs[Long]("value")).toMap
+
+  test("a block without a transactions key ingests with zero transactions") {
+    val sink = Files.createTempDirectory("ingest_notxns").toString
+    BlockIngest.processBatch(spark, jsonBlocks(
+      """{"height":1,"time":1000,"block_hash":"h1","prev_hash":"h0"}""",
+      """{"height":2,"time":1060,"block_hash":"h2","prev_hash":"h1",""" +
+        """"transactions":[{"hash":"t1","type":"poc_request_v1",""" +
+        """"fields":{}},{"hash":"t2","type":"consensus_group_v1",""" +
+        """"fields":{}}]}"""), sink)
+    assert(BlockIngest.committedHeight(sink) === 2L)
+    assert(BlockIngest.readCommitted(spark, sink, "blocks").count() === 2L)
+    assert(BlockIngest.readCommitted(spark, sink, "transactions")
+      .select("block").as[Long].collect().sorted.toSeq === Seq(2L, 2L))
+    val stats = committedStats(sink)
+    assert(stats("blocks") === 2L)
+    assert(stats("transactions") === 2L)
+    assert(stats("challenges") === 1L)
+    assert(stats("consensus_groups") === 1L)
+  }
+
+  test("gateway_scales is written iff the batch carries a gateway scale") {
+    val sink = Files.createTempDirectory("ingest_scales").toString
+    def block(h: Long, cdc: String) =
+      s"""{"height":$h,"time":${1000 + h},"block_hash":"h$h",""" +
+        s""""prev_hash":"h${h - 1}","cdc_keys":$cdc,"transactions":[]}"""
+    def scales(gs: (String, Double)*) = gs.map { case (g, s) =>
+      s"""{"gateway":"$g","scale":$s}""" }.mkString("[", ",", "]")
+    def leaves = CommittedParquet.dataFiles(Paths.get(s"$sink/gateway_scales"))
+      .map(_.getParent.getFileName.toString).distinct.sorted
+    def logged = spark.read.parquet(s"$sink/gateway_scales")
+      .select(col("block").cast("long"), col("actor"), col("scale"))
+      .as[(Long, String, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
+    def dirtyGateways(h: Long) = spark.read.parquet(s"$sink/dirty_sets")
+      .filter(col("block") === h && col("kind") === "gateway")
+      .select("actor").as[String].collect().sorted.toSeq
+    // carries a scale: the log gets the batch's entry
+    BlockIngest.processBatch(spark, jsonBlocks(
+      block(1, s"""{"gateway_scales":${scales("g1" -> 0.5)}}""")), sink)
+    assert(leaves === Seq("slice=1"))
+    assert(logged === Seq((1L, "g1", 0.5)))
+    // carries none (a plain CDC gateway, and a scale entry whose
+    // gateway is null — not a carried scale): no log write
+    BlockIngest.processBatch(spark, jsonBlocks(block(2,
+      """{"gateways":["g9"],"gateway_scales":[{"gateway":null,"scale":1.0}]}""")),
+      sink)
+    assert(leaves === Seq("slice=1"))
+    assert(logged === Seq((1L, "g1", 0.5)))
+    assert(dirtyGateways(2) === Seq("g9"))
+    // the guard still compares against the committed log: g1's
+    // unchanged scale is skipped, g2's first scale is dirty
+    BlockIngest.processBatch(spark, jsonBlocks(block(3,
+      s"""{"gateway_scales":${scales("g1" -> 0.5, "g2" -> 0.7)}}""")), sink)
+    assert(dirtyGateways(3) === Seq("g2"))
+    BlockIngest.processBatch(spark, jsonBlocks(block(4,
+      s"""{"gateway_scales":${scales("g1" -> 0.9)}}""")), sink)
+    assert(dirtyGateways(4) === Seq("g1"))
+    assert(leaves === Seq("slice=1", "slice=3", "slice=4"))
   }
 }

@@ -134,7 +134,7 @@ class FactSidecarSpec extends SparkSpec {
     // manifest-resolving read works (would throw on a .json 'parquet')
     assert(BlockIngest.readCommitted(spark, sink, "transactions")
       .count() > 0)
-    val audit = BlockIngest.auditOrphans(spark, sink)
+    val audit = BlockIngest.auditOrphans(sink)
     assert(!audit.exists(_._1.contains("_fp/")),
       "the audit must not classify sidecar metadata as data files")
   }
@@ -182,7 +182,7 @@ class FactSidecarSpec extends SparkSpec {
     assert(BlockIngest.readCommitted(spark, sink, "blocks")
       .count() === 20L)
     // idempotent: nothing left to fold at minSlices=2 for bucket 0
-    assert(BlockIngest.auditOrphans(spark, sink)
+    assert(BlockIngest.auditOrphans(sink)
       .forall(_._3 == "live"), "no debris after compact + ingest")
   }
 
@@ -257,25 +257,51 @@ class FactSidecarSpec extends SparkSpec {
 
   test("height-range reads prune at the bucket directories: a range " +
     "inside one bucket scans only that bucket's files") {
+    // ... and only its COMMITTED files: a torn slice above the
+    // watermark in the same bucket is never read
     val sink = Files.createTempDirectory("fp_prune").toString
-    ingest(sink, 1L, 60L)
+    ingest(sink, 1L, 20L)
+    // batch 21..23 tears before its commit: its slice=23 leaves land
+    // in bucket hb=2 (16..23) beside the committed slice=20
+    intercept[IllegalStateException](BlockIngest.processBatch(spark,
+      blocks.filter(col("height").between(21L, 23L)), sink,
+      crashAt = Some("before-commit"), bucketBlocks = K))
+    val torn = graft.ops.CommittedParquet
+      .dataFiles(Paths.get(s"$sink/transactions/hb=2/slice=23"))
+    assert(torn.nonEmpty, "the torn slice's files exist on disk")
+    val golden = Files.createTempDirectory("fp_prune_ref").toString
+    ingest(golden, 1L, 20L)
+    def scanned(df: org.apache.spark.sql.DataFrame) = df.inputFiles
+      .map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet
     val range = BlockIngest.readFactRange(spark, sink, "transactions",
-      17L, 22L) // hb=2 only (16..23)
-    // the hb and slice predicates must reach the scan's PARTITION
-    // filters (directory-level pruning — a 1.5M-block chain reads
-    // range/K bucket dirs), the height predicate its pushed filters
-    // (row-group pruning inside the bucket)
+      17L, 23L) // hb=2 only (16..23)
+    // directory-level pruning happens before the scan (a 1.5M-block
+    // chain reads range/K bucket dirs): the scan's files are exactly
+    // the committed files of bucket hb=2; the height predicate reaches
+    // the scan's pushed filters (row-group pruning inside the bucket)
+    val bucketFiles = graft.ops.CommittedParquet
+      .dataFiles(Paths.get(s"$sink/transactions/hb=2/slice=20"))
+      .map(_.toAbsolutePath.toString).toSet
+    assert(bucketFiles.nonEmpty && scanned(range) === bucketFiles,
+      s"the scan must read exactly hb=2's committed files, got: " +
+        scanned(range))
     val plan = range.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    val pf = plan.linesIterator
-      .find(_.trim.startsWith("PartitionFilters:")).getOrElse("")
-    assert(pf.contains("hb") && pf.contains("slice"),
-      s"hb + slice must be partition filters, got: $pf")
     assert(plan.contains("PushedFilters:") && plan.contains("block"),
       "the height range must push to the parquet scan")
-    assert(range.count() ===
-      BlockIngest.readFactCommitted(spark, sink, "transactions")
-        .filter(col("block").between(17L, 22L)).count())
+    // the bucket-part and whole-table reads hide the torn slice too,
+    // and every read returns exactly the committed rows
+    val part = BlockIngest.readFactPart(spark, sink, "transactions", "hb=2")
+    val all = BlockIngest.readFactCommitted(spark, sink, "transactions")
+    assert(scanned(part) === bucketFiles)
+    assert(!scanned(all).exists(_.contains("/slice=23/")),
+      "the committed read must not scan the torn slice")
+    assert(range.count() === BlockIngest.readFactRange(spark, golden,
+      "transactions", 17L, 23L).count())
+    assert(part.count() === BlockIngest.readFactPart(spark, golden,
+      "transactions", "hb=2").count())
+    assert(all.count() ===
+      BlockIngest.readFactCommitted(spark, golden, "transactions").count())
   }
 
   test("inventory sidecars: fold == scan for the bucketed MVCC " +
