@@ -2,19 +2,21 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-/** The maintained DELTA-PARTS store protocol, factored out of
-  * [[graft.streaming.StreamTokenCounts]] so its third user does not
-  * become a third copy: one `bid=N` parquet partition plus an `_fp`
-  * content sidecar per applied micro-batch, a meta-file watermark
-  * written strictly LAST (torn later batches are invisible — the
-  * BlockIngest reader rule), a sidecar-folded store fingerprint
-  * (O(#batches) metadata reads, never a data scan), and a
-  * two-atomic-rename compaction with crash recovery.
+/** The maintained DELTA-PARTS store protocol, one implementation
+  * behind all seven maintained stores (token counts and the winnow,
+  * LSH, MinHash, SimHash, IVF and containment indexes): one `bid=N`
+  * parquet partition plus an `_fp` content sidecar per applied
+  * micro-batch, a meta-file watermark written strictly LAST (torn
+  * later batches are invisible — the BlockIngest reader rule), a
+  * sidecar-folded store fingerprint (O(#batches) metadata reads, never
+  * a data scan), and a two-atomic-rename compaction with crash
+  * recovery.
   *
   * Row semantics stay with the caller:
   *
@@ -30,6 +32,12 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *    artifact built over these rows must re-address, because its
   *    input rows really did change (the token count store's documented
   *    trade).
+  *
+  * What a store OBJECT shares around the protocol lives here once:
+  * [[MaintainedStore]] (wrappers, replay guard, the `foreachBatch`
+  * stream loop) and [[PinnedStore]] (the identity pin, a typed
+  * `G ⇄ String` codec [[DeltaPartsStore.Pin]], and the serve legs). A
+  * store object keeps its schema, its row derivation and its codec.
   *
   * Same commit instinct as the reference's follower (payload first,
   * watermark strictly last — src/be_db_follower.erl:215-260), here as
@@ -50,14 +58,6 @@ final class DeltaPartsStore(
       new String(Files.readAllBytes(metaPath),
         StandardCharsets.UTF_8).trim.toLong
     else -1L
-
-  private def writeMeta(bid: Long): Unit = {
-    Files.createDirectories(Paths.get(storeDir))
-    val tmp = Paths.get(s"$storeDir/meta.txt.tmp")
-    Files.write(tmp, bid.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, metaPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
 
   /** The parts root — exposed so callers can address downstream
     * part-artifacts by this store's sidecars
@@ -114,7 +114,7 @@ final class DeltaPartsStore(
     * batch parts vacuum on that committing serve). With no artifact
     * root — or an empty store — the folded [[parts]] view directly.
     * One implementation behind every maintained store's serve leg
-    * (winnow index, LSH buckets). */
+    * ([[PinnedStore.served]]). */
   def serveParts(spark: SparkSession, artifactName: String,
                  params: String): DataFrame = {
     if (ArtifactStore.root(spark).isEmpty) parts(spark)
@@ -132,7 +132,7 @@ final class DeltaPartsStore(
 
   /** Content fingerprint of the committed part rows from the
     * write-time sidecars — O(#batches) metadata, no scan; equal to a
-    * full-scan fingerprint of [[parts]] (spec-pinned by both stores).
+    * full-scan fingerprint of [[parts]] (spec-pinned by every store).
     */
   def storeFingerprint: String =
     ArtifactStore.fingerprintFromParts(partsDir, committedPartAt(appliedBid))
@@ -157,7 +157,8 @@ final class DeltaPartsStore(
     ArtifactStore.writeFpPart(partsDir, s"bid=$bid",
       ArtifactStore.writeWithFingerprint(
         part.select(cols.map(col): _*), s"$partsDir/bid=$bid"))
-    writeMeta(bid) // commit point, strictly last
+    // commit point, strictly last
+    DeltaPartsStore.writeAtomic(metaPath, bid.toString)
   }
 
   /** Rewrite every committed part into ONE `bid=<applied>` partition
@@ -238,6 +239,62 @@ object DeltaPartsStore {
     * input bytes (the q322/StreamNswInsert grouping constant). */
   val CompactTargetBytes: Long = 128L * 1024 * 1024
 
+  /** Write `text` to `p` through `<p>.tmp` and one atomic rename — a
+    * crash never leaves a torn `p`; a leftover `.tmp` is not `p`. */
+  def writeAtomic(p: Path, text: String): Unit = {
+    Files.createDirectories(p.getParent)
+    val tmp = p.resolveSibling(s"${p.getFileName}.tmp")
+    Files.write(tmp, text.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** A store's IDENTITY PIN: the parameters its rows were derived
+    * under (a geometry, a centroid matrix, a shingle order), kept in
+    * the text file `file` beside the parts ([[PinnedStore]] pins and
+    * checks it). `decode` answers None for a body it cannot parse and
+    * may `require` deeper invariants; `what` names the pinned thing in
+    * refusals. */
+  final case class Pin[G](file: String, what: String,
+                          encode: G => String,
+                          decode: String => Option[G]) {
+    def path(storeDir: String): Path = Paths.get(s"$storeDir/$file")
+
+    /** The pinned value, or None for a store no apply has pinned yet;
+      * a body the codec refuses fails LOUDLY naming the file. */
+    def read(storeDir: String): Option[G] = {
+      val p = path(storeDir)
+      Option.when(Files.exists(p)) {
+        val body = new String(Files.readAllBytes(p),
+          StandardCharsets.UTF_8).trim
+        val g = try decode(body) catch {
+          case e: IllegalArgumentException =>
+            throw new IllegalArgumentException(
+              s"$what pin at $p: ${e.getMessage}", e)
+        }
+        g.getOrElse(throw new IllegalStateException(
+          s"unparseable $what pin at $p: '$body'"))
+      }
+    }
+
+    def write(storeDir: String, g: G): Unit =
+      writeAtomic(path(storeDir), encode(g))
+  }
+
+  object Pin {
+    /** A one-line geometry pin of named non-negative integers in
+      * order, `a=1,b=2,...`. */
+    def fields(file: String, names: String*): Pin[Seq[Int]] = {
+      val re = names.map(n => s"$n=(\\d+)").mkString(",").r
+      Pin[Seq[Int]](file, "geometry",
+        vs => names.zip(vs).map { case (n, v) => s"$n=$v" }.mkString(","),
+        {
+          case re(vs @ _*) => Some(vs.map(_.toInt))
+          case _ => None
+        })
+    }
+  }
+
   /** Parse a `bid=N` part/dir name — THE protocol rule, one copy, so
     * an external auditor (the q397 registry) and the store itself can
     * never drift on what counts as a committed part. Not a bid-shaped
@@ -262,4 +319,130 @@ object DeltaPartsStore {
   def committedPartAt(partsDir: String, applied: Long)
                      (part: String): Boolean =
     bidOf(part, partsDir).exists(_ <= applied)
+}
+
+/** The wrappers every maintained store OBJECT shares around one
+  * [[DeltaPartsStore]] per store dir: the object supplies its part
+  * `schema` and derives its batch rows into [[commit]]. */
+trait MaintainedStore {
+  def schema: StructType
+
+  /** A REPACK unless overridden (see [[DeltaPartsStore]]). */
+  protected def compactRewrite: DataFrame => DataFrame = identity
+
+  protected final def store(storeDir: String): DeltaPartsStore =
+    new DeltaPartsStore(storeDir, schema, compactRewrite)
+
+  /** Applied-through batch id (-1 = empty store). */
+  def appliedBid(storeDir: String): Long = store(storeDir).appliedBid
+
+  /** The folded view: committed part rows. */
+  def parts(spark: SparkSession, storeDir: String): DataFrame =
+    store(storeDir).parts(spark)
+
+  /** Sidecar-folded content fingerprint — O(#batches) metadata; equal
+    * to a full-scan fingerprint of [[parts]], invariant across a
+    * repacking [[compact]] and changed by a merging one. */
+  def storeFingerprint(storeDir: String): String =
+    store(storeDir).storeFingerprint
+
+  /** Rewrite every committed part into ONE partition (crash-safe, see
+    * [[DeltaPartsStore.compact]]). Returns true if rewritten. */
+  def compact(spark: SparkSession, storeDir: String): Boolean =
+    store(storeDir).compact(spark)
+
+  /** Commit one batch's part rows. A replayed `bid` (at or below the
+    * watermark) is a no-op that runs not even `check`, the identity
+    * pin; otherwise `check` runs first. */
+  protected final def commit(storeDir: String, bid: Long,
+                             check: => Unit = ())
+                            (part: => DataFrame): Unit = {
+    val st = store(storeDir)
+    if (bid > st.appliedBid) {
+      check
+      st.applyPart(part, bid)
+    }
+  }
+
+  /** The idempotent `foreachBatch` sink: `apply` commits each
+    * micro-batch under its batch id; compaction auto-triggers past
+    * `compactAfterBatches` per-batch partitions — OUTSIDE the batch
+    * commit, so a compaction failure never loses a batch. */
+  protected final def runLoop(stream: DataFrame, storeDir: String,
+                              trigger: Trigger, compactAfterBatches: Int)
+                             (apply: (DataFrame, Long) => Unit)
+      : DataStreamWriter[Row] =
+    stream.writeStream
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, bid: Long) =>
+        apply(batch, bid)
+        if (store(storeDir).partDirCount > compactAfterBatches) {
+          compact(batch.sparkSession, storeDir)
+          ()
+        }
+      }
+}
+
+/** A [[MaintainedStore]] whose rows mean something only under the
+  * identity [[pin]]ned at its first apply, served through the artifact
+  * store. */
+trait PinnedStore[G] extends MaintainedStore {
+  protected def pin: DeltaPartsStore.Pin[G]
+
+  protected def artifactName: String
+  protected def artifactParams(storeDir: String): String
+
+  /** The pinned identity, or None for an unpinned store — a caller
+    * deriving its own probe keys takes them from HERE (or
+    * [[requirePinned]]-checks its own), never from configured
+    * constants. */
+  def pinned(storeDir: String): Option[G] = pin.read(storeDir)
+
+  /** The re-encoded pin's first line (all of a one-line pin). */
+  def pinLine(storeDir: String): Option[String] =
+    pinned(storeDir).map(g => firstLine(pin.encode(g)))
+
+  private def firstLine(s: String) = s.linesIterator.next()
+
+  /** Fail LOUDLY unless the store is pinned to exactly `want`, naming
+    * both (an unpinned store refuses too). */
+  def requirePinned(storeDir: String, want: G): Unit = {
+    val w = pin.encode(want)
+    val have = pinned(storeDir).map(pin.encode).getOrElse("<unpinned>")
+    require(have == w, {
+      val (hh, wh) = (firstLine(have), firstLine(w))
+      s"${getClass.getSimpleName.stripSuffix("$")} $storeDir is pinned " +
+        s"to ${pin.what} '$hh'; refusing a caller keyed under '$wh'" +
+        (if (hh == wh) s" (same shape, DIFFERENT ${pin.what} values)"
+        else "") +
+        " — rows derived under another identity are silently wrong"
+    })
+  }
+
+  /** [[commit]] under identity `want`: the first apply pins it (after
+    * `beforePin` — the pin is the commit point), every later apply must
+    * match. */
+  protected final def commitPinned(storeDir: String, bid: Long, want: G,
+                                   beforePin: => Unit = ())
+                                  (part: => DataFrame): Unit =
+    commit(storeDir, bid, {
+      if (Files.exists(pin.path(storeDir))) requirePinned(storeDir, want)
+      else {
+        beforePin
+        pin.write(storeDir, want)
+      }
+    })(part)
+
+  /** Serve the store PART-ADDRESSED through the artifact store
+    * ([[DeltaPartsStore.serveParts]]). */
+  def served(spark: SparkSession, storeDir: String): DataFrame =
+    store(storeDir).serveParts(spark, artifactName,
+      artifactParams(storeDir))
+
+  /** [[served]] after [[requirePinned]] — the serve path for a query
+    * that derived its own probe keys. */
+  def served(spark: SparkSession, storeDir: String, want: G): DataFrame = {
+    requirePinned(storeDir, want)
+    served(spark, storeDir)
+  }
 }

@@ -186,20 +186,14 @@ object PipelineQueries80 {
                 docs.where(pmod(col("doc_id"), lit(2)) === b), b.toLong,
                 "doc_id", "text", sim)
             })), 5) { case (_, f) => f() }
-        // identity strings come off the PIN ACCESSORS (the engine
-        // path); the oracle re-reads the pin files raw
-        val mhId = StreamMinhashIndex.geometry(mh)
-          .map { case (b, r) => s"bands=$b,rowsPerBand=$r" }.get
-        val lshId = StreamLshIndex.geometry(lsh)
-          .map { case (b, bb, d) => s"bands=$b,bitsPerBand=$bb,dims=$d" }
-          .get
-        val ivfId = StreamIvfIndex.centroids(ivf)
-          .map { case (m, pr) => s"probes=$pr,k=${m.length}," +
-            s"dims=${m.head.length}" }.get
-        val winId = StreamWinnowIndex.geometry(win)
-          .map { case (k, w) => s"k=$k,w=$w" }.get
-        val simId = StreamSimhashIndex.geometry(sim)
-          .map { case (b, k) => s"bits=$b,blocks=$k" }.get
+        // identity strings come off the stores' PIN CODECS (the engine
+        // path: decode, re-encode, one-line summary); the oracle
+        // re-reads the pin files raw
+        val mhId = StreamMinhashIndex.pinLine(mh).get
+        val lshId = StreamLshIndex.pinLine(lsh).get
+        val ivfId = StreamIvfIndex.pinLine(ivf).get
+        val winId = StreamWinnowIndex.pinLine(win).get
+        val simId = StreamSimhashIndex.pinLine(sim).get
         val (mc, ml) = storeSql("minhash", mh,
           s"(SELECT trim(content) FROM read_text('$mh/geometry.txt'))")
         val (lc, ll) = storeSql("lsh", lsh,

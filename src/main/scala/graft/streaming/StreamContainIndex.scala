@@ -1,15 +1,11 @@
 package graft.streaming
 
 import graft.functions.TextAnalysis
-import graft.ops.DeltaPartsStore
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import graft.ops.{DeltaPartsStore, PinnedStore}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
   StructType}
-
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Streaming-maintained CONTAINMENT postings index — the corpus-side
   * state of the one-sided prefix-filtered containment join
@@ -55,11 +51,11 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * bit-for-bit), repack compaction (store fingerprint invariant),
   * part-addressed serving. The shingle geometry (k=3, hash order)
   * rides the house constants and is pinned like the winnow store's.
-  * Store mechanics are [[graft.ops.DeltaPartsStore]]'s.
+  * Store mechanics and the pin are [[graft.ops.DeltaPartsStore]]'s.
   */
-object StreamContainIndex {
+object StreamContainIndex extends PinnedStore[String] {
 
-  val postSchema: StructType = StructType(Seq(
+  val schema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("tok", LongType),
     StructField("pos", IntegerType),
@@ -69,91 +65,53 @@ object StreamContainIndex {
     * [[graft.functions.TextAnalysis.shingleHashes]]. */
   val ShingleK = 3
 
-  private def store(storeDir: String) =
-    new DeltaPartsStore(storeDir, postSchema, identity)
+  /** The pin line is kept as written: it carries the ORDER IDENTITY,
+    * and a hot-banded store pins the full MD5 of its hot list, which
+    * no codec could invert. */
+  protected val pin =
+    DeltaPartsStore.Pin[String]("geometry.txt", "geometry", identity, Some(_))
 
-  /** Applied-through batch id (-1 = empty store). */
-  def appliedBid(storeDir: String): Long = store(storeDir).appliedBid
+  /** The hot list itself (df-descending), pinned strictly BEFORE
+    * `geometry.txt`: the geometry pin is the commit point, so a crash
+    * between the writes leaves an unpinned store (re-pinned
+    * idempotently), never a pinned store with a missing hot list. */
+  private val hotPin = DeltaPartsStore.Pin[Seq[Long]]("hotset.txt",
+    "hot-set", _.mkString(","),
+    b => Some(if (b.isEmpty) Seq.empty else b.split(",").toSeq.map(_.toLong)))
 
-  /** The folded postings: committed (doc_id, tok, pos, len) rows. */
-  def posts(spark: SparkSession, storeDir: String): DataFrame =
-    store(storeDir).parts(spark)
+  protected val artifactName = "contain_maintained_posts"
 
-  /** Sidecar-folded content fingerprint — O(#batches) metadata; equal
-    * to a full-scan fingerprint of [[posts]] and invariant across
-    * [[compact]]. */
-  def storeFingerprint(storeDir: String): String =
-    store(storeDir).storeFingerprint
+  /** The artifact params carry the PINNED order identity, so stores
+    * under different orders can never collide on one artifact scope. */
+  protected def artifactParams(storeDir: String) =
+    geometry(storeDir).getOrElse(geomString(Seq.empty))
 
-  private def geomPath(storeDir: String) = Paths.get(s"$storeDir/geometry.txt")
-
-  /** The pin line carries the ORDER IDENTITY: a hot-banded store pins
-    * the full MD5 of its hot list — a store written under a different
-    * hot set has different positions everywhere and must refuse. */
+  /** A hot-banded store's order identity names its hot list by MD5 — a
+    * store written under a different hot set has different positions
+    * everywhere and must refuse. */
   private def geomString(hotSet: Seq[Long]): String =
     if (hotSet.isEmpty) s"shingles=$ShingleK,order=hash"
     else s"shingles=$ShingleK,order=hotband,n=${hotSet.length}," +
       s"h=${graft.ops.ArtifactStore.contentHash(hotSet.mkString(","))}"
 
+  /** The folded postings: committed (doc_id, tok, pos, len) rows. */
+  def posts(spark: SparkSession, storeDir: String): DataFrame =
+    parts(spark, storeDir)
+
   /** The store's pinned geometry line, or None for an unpinned store. */
-  def geometry(storeDir: String): Option[String] = {
-    val p = geomPath(storeDir)
-    if (!Files.exists(p)) None
-    else Some(new String(Files.readAllBytes(p),
-      StandardCharsets.UTF_8).trim)
-  }
+  def geometry(storeDir: String): Option[String] = pinned(storeDir)
 
-  private def hotPath(storeDir: String) = Paths.get(s"$storeDir/hotset.txt")
+  /** The store's pinned hot list, empty for a hash-order store —
+    * readers that derive their own probe keys take the order FROM HERE
+    * (the StreamIvfIndex.centroids pattern). */
+  def hotSet(storeDir: String): Seq[Long] =
+    hotPin.read(storeDir).getOrElse(Seq.empty)
 
-  /** The store's pinned hot list (df-descending), empty for a
-    * hash-order store — readers that derive their own probe keys take
-    * the order FROM HERE (the StreamIvfIndex.centroids pattern). */
-  def hotSet(storeDir: String): Seq[Long] = {
-    val p = hotPath(storeDir)
-    if (!Files.exists(p)) Seq.empty
-    else {
-      val body = new String(Files.readAllBytes(p),
-        StandardCharsets.UTF_8).trim
-      if (body.isEmpty) Seq.empty
-      else body.split(",").toSeq.map(_.toLong)
-    }
-  }
-
-  /** Fail LOUDLY unless the store is pinned to exactly this geometry
-    * and order — positions under a different shingle width, order, or
-    * hot set are a different index entirely. */
+  /** Positions under a different shingle width, order, or hot set are a
+    * different index entirely. */
   def requireGeometry(storeDir: String,
-                      hotSet: Seq[Long] = Seq.empty): Unit = {
-    val want = geomString(hotSet)
-    val have = geometry(storeDir).getOrElse("<unpinned>")
-    require(have == want,
-      s"containment store $storeDir is pinned to '$have'; refusing a " +
-        s"reader keyed under '$want' — positions under a " +
-        "different order probe silently wrong prefixes")
-  }
-
-  private def checkGeometry(storeDir: String, hot: Seq[Long]): Unit = {
-    val p = geomPath(storeDir)
-    if (Files.exists(p)) requireGeometry(storeDir, hot)
-    else {
-      Files.createDirectories(Paths.get(storeDir))
-      if (hot.nonEmpty) {
-        val ht = Paths.get(s"$storeDir/hotset.txt.tmp")
-        Files.write(ht, hot.mkString(",")
-          .getBytes(StandardCharsets.UTF_8))
-        Files.move(ht, hotPath(storeDir), StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-      }
-      // geometry strictly AFTER the hot list: the pin is the commit
-      // point, so a crash between the writes leaves an unpinned store
-      // (re-pinned idempotently), never a pinned store with a missing
-      // hot list
-      val tmp = Paths.get(s"$storeDir/geometry.txt.tmp")
-      Files.write(tmp, geomString(hot).getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
+                      hotSet: Seq[Long] = Seq.empty): Unit =
+    requirePinned(storeDir, geomString(hotSet))
 
   /** Train a hot-shingle list from a reference corpus: the `n` most
     * frequent shingle hashes, df-descending (ties by hash) — a
@@ -242,36 +200,18 @@ object StreamContainIndex {
     * consumers share one materialization). */
   private[graft] def applyPosts(posts: DataFrame, bid: Long,
                                 storeDir: String,
-                                hot: Seq[Long] = Seq.empty): Unit = {
-    val st = store(storeDir)
-    if (bid <= st.appliedBid) return
-    checkGeometry(storeDir, hot)
-    st.applyPart(posts, bid)
-  }
+                                hot: Seq[Long] = Seq.empty): Unit =
+    commitPinned(storeDir, bid, geomString(hot),
+      beforePin = if (hot.nonEmpty) hotPin.write(storeDir, hot))(posts)
 
-  /** Repack every committed part — rows and store fingerprint
-    * preserved exactly. Returns true if rewritten. */
-  def compact(spark: SparkSession, storeDir: String,
-              minDirs: Int = 2): Boolean =
-    store(storeDir).compact(spark, minDirs)
-
-  /** Serve the maintained postings through the artifact store,
-    * PART-ADDRESSED by the write-time sidecars. With no artifact
-    * root: the folded view directly. The artifact params carry the
-    * PINNED order identity, so stores under different orders can
-    * never collide on one artifact scope. */
   def servedPosts(spark: SparkSession, storeDir: String): DataFrame =
-    store(storeDir).serveParts(spark, "contain_maintained_posts",
-      params = geometry(storeDir).getOrElse(geomString(Seq.empty)))
+    served(spark, storeDir)
 
-  /** [[servedPosts]] with the caller's order REQUIRE-MATCHED against
-    * the store pin first — the serve path a caller that derives its
-    * own probe keys should use. */
+  /** The validated serve path a caller that derives its own probe keys
+    * should use. */
   def servedPosts(spark: SparkSession, storeDir: String,
-                  hot: Seq[Long]): DataFrame = {
-    requireGeometry(storeDir, hot)
-    servedPosts(spark, storeDir)
-  }
+                  hot: Seq[Long]): DataFrame =
+    served(spark, storeDir, geomString(hot))
 
   /** Cross-batch containment CANDIDATES between an arriving batch's
     * postings and the standing index, BOTH directions in one pass:
@@ -306,21 +246,4 @@ object StreamContainIndex {
       .where(col("contained") =!= col("container"))
       .distinct()
   }
-
-  /** Wire an (id, text) document stream into the maintained index.
-    * Compaction auto-triggers past `compactAfterBatches` per-batch
-    * partitions — OUTSIDE the batch commit. */
-  def run(stream: DataFrame, idCol: String, textCol: String,
-          storeDir: String, trigger: Trigger,
-          compactAfterBatches: Int = 48,
-          hot: Seq[Long] = Seq.empty): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        applyBatch(batch, bid, idCol, textCol, storeDir, hot)
-        if (store(storeDir).partDirCount > compactAfterBatches) {
-          compact(batch.sparkSession, storeDir)
-          ()
-        }
-      }
 }

@@ -1,14 +1,11 @@
 package graft.streaming
 
-import graft.ops.{DeltaPartsStore, VectorSearch}
+import graft.ops.{DeltaPartsStore, PinnedStore, VectorSearch}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
   StructType}
-
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Streaming-maintained IVF postings INDEX — the coarse-quantizer
   * assignment table ([[graft.ops.VectorSearch.ivfAssign]]: (id, cell)
@@ -40,108 +37,62 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * Centroid DRIFT is [[StreamIvfRefresh]]'s job: when its PSI gate
   * retrains, the new matrix is a NEW store identity — rebuild into a
   * fresh store dir and swap, never mix postings across matrices (the
-  * same refusal the pin enforces). Store mechanics are
+  * same refusal the pin enforces). Store mechanics and the pin are
   * [[graft.ops.DeltaPartsStore]]'s.
   */
-object StreamIvfIndex {
+object StreamIvfIndex extends PinnedStore[(Array[Array[Double]], Int)] {
 
-  val assignSchema: StructType = StructType(Seq(
+  val schema: StructType = StructType(Seq(
     StructField("id", LongType),
     StructField("cell", IntegerType)))
 
-  private def store(storeDir: String) =
-    new DeltaPartsStore(storeDir, assignSchema, identity)
+  private val Header = """probes=(\d+),k=(\d+),dims=(\d+)""".r
 
-  /** Applied-through batch id (-1 = empty store). */
-  def appliedBid(storeDir: String): Long = store(storeDir).appliedBid
+  /** Lossless (centroid matrix, probes) codec: a
+    * `probes=..,k=..,dims=..` header line (the pin's summary), then
+    * one comma-joined Double.toString line per centroid. A pin whose
+    * rows disagree with its header is refused: a truncated row would
+    * hand readers a ragged matrix that probes silently wrong cells. */
+  protected val pin = DeltaPartsStore.Pin[(Array[Array[Double]], Int)](
+    "centroids.txt", "centroid",
+    { case (m, probes) =>
+      require(m.nonEmpty,
+        "IVF pin needs a non-empty centroid matrix — an empty matrix " +
+          "has no cells to post to")
+      (s"probes=$probes,k=${m.length},dims=${m.head.length}" +:
+        m.map(_.mkString(","))).mkString("\n")
+    },
+    body => {
+      val lines = body.split("\n")
+      lines.head match {
+        case Header(pr, k, d) =>
+          val m = lines.tail.map(_.split(",").map(_.toDouble))
+          require(m.length == k.toInt,
+            s"declares k=$k but has ${m.length} rows")
+          m.zipWithIndex.foreach { case (row, i) =>
+            require(row.length == d.toInt,
+              s"declares dims=$d but row $i has ${row.length} values — " +
+                "refusing a ragged matrix")
+          }
+          Some((m, pr.toInt))
+        case _ => None
+      }
+    })
+  protected val artifactName = "ivf_maintained_assign"
+  protected def artifactParams(storeDir: String) = "cells"
 
   /** The folded postings: committed (id, cell) rows. */
   def assign(spark: SparkSession, storeDir: String): DataFrame =
-    store(storeDir).parts(spark)
-
-  /** Sidecar-folded content fingerprint — O(#batches) metadata; equal
-    * to a full-scan fingerprint of [[assign]] and invariant across
-    * [[compact]] (the DeltaPartsStore repack contract). */
-  def storeFingerprint(storeDir: String): String =
-    store(storeDir).storeFingerprint
-
-  private def pinPath(storeDir: String) = Paths.get(s"$storeDir/centroids.txt")
-
-  /** Lossless centroid-matrix serialization: a `probes=..,k=..,dims=..`
-    * header line, then one comma-joined Double.toString line per
-    * centroid (Double.toString → parseDouble round-trips exactly). */
-  private def pinString(centroids: Array[Array[Double]],
-                        probes: Int): String = {
-    require(centroids.nonEmpty,
-      "IVF pin needs a non-empty centroid matrix — an empty matrix " +
-        "has no cells to post to")
-    (s"probes=$probes,k=${centroids.length},dims=${centroids.head.length}" +:
-      centroids.map(_.mkString(","))).mkString("\n")
-  }
+    parts(spark, storeDir)
 
   /** The store's pinned (centroid matrix, probes), or None for a store
-    * no apply has pinned yet — the read-side half of the pin: a caller
-    * that derives its own probe cells takes the matrix from HERE. */
-  def centroids(storeDir: String): Option[(Array[Array[Double]], Int)] = {
-    val p = pinPath(storeDir)
-    if (!Files.exists(p)) None
-    else {
-      val lines = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        .trim.split("\n")
-      val hdr = "probes=(\\d+),k=(\\d+),dims=(\\d+)".r
-      lines.head match {
-        case hdr(pr, k, d) =>
-          val m = lines.tail.map(_.split(",").map(_.toDouble))
-          require(m.length == k.toInt,
-            s"centroid pin at $p declares k=$k but has ${m.length} rows")
-          // a truncated row would hand readers a ragged matrix that
-          // probes silently wrong cells — the failure class every
-          // other pin read refuses by name
-          m.zipWithIndex.foreach { case (row, i) =>
-            require(row.length == d.toInt,
-              s"centroid pin at $p declares dims=$d but row $i has " +
-                s"${row.length} values — refusing a ragged matrix")
-          }
-          Some((m, pr.toInt))
-        case body => throw new IllegalStateException(
-          s"unparseable centroid pin at $p: '$body'")
-      }
-    }
-  }
+    * no apply has pinned yet. */
+  def centroids(storeDir: String): Option[(Array[Array[Double]], Int)] =
+    pinned(storeDir)
 
-  /** Fail LOUDLY unless the store is pinned to exactly this matrix and
-    * multiplicity — the serve-path twin of the apply-path pin. */
   def requireCentroids(storeDir: String, cents: Array[Array[Double]],
-                       probes: Int): Unit = {
-    val want = pinString(cents, probes)
-    val have = centroids(storeDir)
-      .map { case (m, pr) => pinString(m, pr) }
-      .getOrElse("<unpinned>")
-    require(have == want,
-      s"IVF store $storeDir is pinned to '${have.linesIterator.next()}'; " +
-        s"refusing a caller keyed under " +
-        s"'${want.linesIterator.next()}'" +
-        (if (have.linesIterator.next() == want.linesIterator.next())
-          " (same shape, DIFFERENT centroid values)" else "") +
-        " — a mismatched reader probes silently wrong cells")
-  }
-
-  /** Pin-or-check — first apply writes the pin, every later apply must
-    * match exactly. */
-  private def checkCentroids(storeDir: String,
-                             cents: Array[Array[Double]],
-                             probes: Int): Unit = {
-    val p = pinPath(storeDir)
-    if (Files.exists(p)) requireCentroids(storeDir, cents, probes)
-    else {
-      Files.createDirectories(Paths.get(storeDir))
-      val tmp = Paths.get(s"$storeDir/centroids.txt.tmp")
-      Files.write(tmp,
-        pinString(cents, probes).getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
+                       probes: Int): Unit =
+    requirePinned(storeDir, (cents, probes))
 
   /** Apply one batch: post the batch's vectors to their `probes`
     * nearest cells, commit the part + sidecar, move the watermark.
@@ -157,57 +108,29 @@ object StreamIvfIndex {
                                 storeDir: String): Unit = {
     require(cents.nonEmpty,
       s"IVF store $storeDir needs a non-empty centroid matrix")
-    val st = store(storeDir)
-    if (bid <= st.appliedBid) return
-    checkCentroids(storeDir, cents, probes)
-    val dims = cents.head.length
-    st.applyPart(
+    commitPinned(storeDir, bid, (cents, probes))(
       VectorSearch.ivfAssign(
-        batch.where(col(vecCol).isNotNull && size(col(vecCol)) === dims),
+        batch.where(col(vecCol).isNotNull &&
+          size(col(vecCol)) === cents.head.length),
         idCol, vecCol, cents, probes)
         .select(col("id").cast("long").as("id"),
-          col("cell").cast("int").as("cell")),
-      bid)
+          col("cell").cast("int").as("cell")))
   }
 
-  /** Repack every committed part — rows and store fingerprint
-    * preserved exactly. Returns true if rewritten. */
-  def compact(spark: SparkSession, storeDir: String,
-              minDirs: Int = 2): Boolean =
-    store(storeDir).compact(spark, minDirs)
-
-  /** Serve the maintained postings through the artifact store,
-    * PART-ADDRESSED by the write-time sidecars (one part per committed
-    * batch; compaction collapses the part set). With no artifact root:
-    * the folded view directly. */
   def servedAssign(spark: SparkSession, storeDir: String): DataFrame =
-    store(storeDir).serveParts(spark, "ivf_maintained_assign",
-      params = "cells")
+    served(spark, storeDir)
 
-  /** [[servedAssign]] with the caller's matrix REQUIRE-MATCHED against
-    * the store pin first — the serve path any query that derived its
-    * own probe cells should use: the raw overload trusts the caller
-    * already validated (or took the matrix from [[centroids]]). */
+  /** The validated serve path any query that derived its own probe
+    * cells should use. */
   def servedAssign(spark: SparkSession, storeDir: String,
-                   cents: Array[Array[Double]], probes: Int): DataFrame = {
-    requireCentroids(storeDir, cents, probes)
-    servedAssign(spark, storeDir)
-  }
+                   cents: Array[Array[Double]], probes: Int): DataFrame =
+    served(spark, storeDir, (cents, probes))
 
-  /** Wire an (id, vector) stream into the maintained postings.
-    * Compaction auto-triggers past `compactAfterBatches` per-batch
-    * partitions — OUTSIDE the batch commit. */
+  /** Wire an (id, vector) stream into the maintained postings. */
   def run(stream: DataFrame, idCol: String, vecCol: String,
           cents: Array[Array[Double]], probes: Int, storeDir: String,
           trigger: Trigger,
           compactAfterBatches: Int = 48): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        applyBatch(batch, bid, idCol, vecCol, cents, probes, storeDir)
-        if (store(storeDir).partDirCount > compactAfterBatches) {
-          compact(batch.sparkSession, storeDir)
-          ()
-        }
-      }
+    runLoop(stream, storeDir, trigger, compactAfterBatches)(
+      applyBatch(_, _, idCol, vecCol, cents, probes, storeDir))
 }

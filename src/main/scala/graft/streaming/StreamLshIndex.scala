@@ -1,14 +1,11 @@
 package graft.streaming
 
-import graft.ops.{DeltaPartsStore, VectorSearch}
+import graft.ops.{DeltaPartsStore, PinnedStore, VectorSearch}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
   StructType}
-
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Streaming-maintained sign-LSH bucket INDEX — the ANN family's
   * corpus-side index (q31/q376's (id, band, key) rows: one key per
@@ -34,91 +31,33 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * under (bands, bitsPerBand, dims) is meaningless under any other
   * geometry, so the first apply pins `geometry.txt` and every later
   * apply must match — LOUDLY, because mixed-geometry buckets would
-  * serve silently wrong candidates. Store mechanics are
+  * serve silently wrong candidates. Store mechanics and the pin are
   * [[graft.ops.DeltaPartsStore]]'s.
   */
-object StreamLshIndex {
+object StreamLshIndex extends PinnedStore[Seq[Int]] {
 
-  val bucketSchema: StructType = StructType(Seq(
+  val schema: StructType = StructType(Seq(
     StructField("id", LongType),
     StructField("band", IntegerType),
     StructField("key", LongType)))
 
-  private def store(storeDir: String) =
-    new DeltaPartsStore(storeDir, bucketSchema, identity)
-
-  /** Applied-through batch id (-1 = empty store). */
-  def appliedBid(storeDir: String): Long = store(storeDir).appliedBid
+  protected val pin =
+    DeltaPartsStore.Pin.fields("geometry.txt", "bands", "bitsPerBand", "dims")
+  protected val artifactName = "lsh_maintained_buckets"
+  protected def artifactParams(storeDir: String) = "keys"
 
   /** The folded index: committed (id, band, key) rows. */
   def buckets(spark: SparkSession, storeDir: String): DataFrame =
-    store(storeDir).parts(spark)
-
-  /** Sidecar-folded content fingerprint — O(#batches) metadata; equal
-    * to a full-scan fingerprint of [[buckets]] and invariant across
-    * [[compact]] (the DeltaPartsStore repack contract). */
-  def storeFingerprint(storeDir: String): String =
-    store(storeDir).storeFingerprint
-
-  private def geomPath(storeDir: String) = Paths.get(s"$storeDir/geometry.txt")
-
-  private def geomString(bands: Int, bitsPerBand: Int, dims: Int) =
-    s"bands=$bands,bitsPerBand=$bitsPerBand,dims=$dims"
-
-  private val GeomRe = """bands=(\d+),bitsPerBand=(\d+),dims=(\d+)""".r
+    parts(spark, storeDir)
 
   /** The store's pinned plane geometry as (bands, bitsPerBand, dims),
-    * or None for a store no apply has pinned yet. The read-side half
-    * of the pin: a query-side caller derives its probe keys from
-    * THESE values (or [[requireGeometry]]-checks its own against them)
-    * instead of trusting whatever constants it was configured with — a
-    * mismatched reader probing raw keys gets silently wrong
-    * candidates, the exact failure class the write pin refuses. */
-  def geometry(storeDir: String): Option[(Int, Int, Int)] = {
-    val p = geomPath(storeDir)
-    if (!Files.exists(p)) None
-    else new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      .trim match {
-      case GeomRe(b, bb, d) => Some((b.toInt, bb.toInt, d.toInt))
-      case body => throw new IllegalStateException(
-        s"unparseable geometry pin at $p: '$body'")
-    }
-  }
+    * or None for a store no apply has pinned yet. */
+  def geometry(storeDir: String): Option[(Int, Int, Int)] =
+    pinned(storeDir).map { case Seq(b, bb, d) => (b, bb, d) }
 
-  /** Fail LOUDLY unless the store is pinned to exactly this geometry —
-    * the serve-path twin of the apply-path pin. */
   def requireGeometry(storeDir: String, bands: Int, bitsPerBand: Int,
-                      dims: Int): Unit = {
-    val want = geomString(bands, bitsPerBand, dims)
-    val have = geometry(storeDir)
-      .map { case (b, bb, d) => geomString(b, bb, d) }
-      .getOrElse("<unpinned>")
-    require(have == want,
-      s"LSH store $storeDir is pinned to geometry '$have'; refusing " +
-        s"to answer a query probing under '$want' — a mismatched " +
-        "reader gets silently wrong candidates")
-  }
-
-  /** Pin-or-check the plane geometry — first apply writes it, every
-    * later apply must match exactly. */
-  private def checkGeometry(storeDir: String, bands: Int,
-                            bitsPerBand: Int, dims: Int): Unit = {
-    val want = geomString(bands, bitsPerBand, dims)
-    val p = geomPath(storeDir)
-    if (Files.exists(p)) {
-      val have = new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim
-      require(have == want,
-        s"LSH store $storeDir is pinned to geometry '$have'; refusing " +
-          s"to apply a batch keyed under '$want' — mixed-geometry " +
-          "buckets would serve silently wrong candidates")
-    } else {
-      Files.createDirectories(Paths.get(storeDir))
-      val tmp = Paths.get(s"$storeDir/geometry.txt.tmp")
-      Files.write(tmp, want.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
+                      dims: Int): Unit =
+    requirePinned(storeDir, Seq(bands, bitsPerBand, dims))
 
   /** Apply one batch: key the batch's vectors, commit the part +
     * sidecar, move the watermark. Null and WRONG-DIMENSION vectors
@@ -134,58 +73,28 @@ object StreamLshIndex {
   private[graft] def applyBatch(batch: DataFrame, bid: Long,
                                 idCol: String, vecCol: String,
                                 bands: Int, bitsPerBand: Int, dims: Int,
-                                storeDir: String): Unit = {
-    val st = store(storeDir)
-    if (bid <= st.appliedBid) return
-    checkGeometry(storeDir, bands, bitsPerBand, dims)
-    st.applyPart(
+                                storeDir: String): Unit =
+    commitPinned(storeDir, bid, Seq(bands, bitsPerBand, dims))(
       VectorSearch.lshCandidates(
         batch.where(col(vecCol).isNotNull && size(col(vecCol)) === dims),
         idCol, vecCol, bands, bitsPerBand, dims)
         .select(col("id").cast("long").as("id"), col("band"),
-          col("key").cast("long").as("key")),
-      bid)
-  }
+          col("key").cast("long").as("key")))
 
-  /** Repack every committed part into ONE partition — rows and store
-    * fingerprint preserved exactly. Returns true if rewritten. */
-  def compact(spark: SparkSession, storeDir: String,
-              minDirs: Int = 2): Boolean =
-    store(storeDir).compact(spark, minDirs)
-
-  /** Serve the maintained index through the artifact store,
-    * PART-ADDRESSED by the write-time sidecars (one part per committed
-    * batch; compaction collapses the part set). With no artifact root:
-    * the folded view directly. */
   def servedBuckets(spark: SparkSession, storeDir: String): DataFrame =
-    store(storeDir).serveParts(spark, "lsh_maintained_buckets",
-      params = "keys")
+    served(spark, storeDir)
 
-  /** [[servedBuckets]] with the caller's probe geometry
-    * REQUIRE-MATCHED against the store pin first — the serve-path any
-    * query that derived its own probe keys should use (q386 does): the
-    * raw-key overload trusts the caller already validated. */
+  /** The validated serve path any query that derived its own probe
+    * keys should use (q386 does). */
   def servedBuckets(spark: SparkSession, storeDir: String, bands: Int,
-                    bitsPerBand: Int, dims: Int): DataFrame = {
-    requireGeometry(storeDir, bands, bitsPerBand, dims)
-    servedBuckets(spark, storeDir)
-  }
+                    bitsPerBand: Int, dims: Int): DataFrame =
+    served(spark, storeDir, Seq(bands, bitsPerBand, dims))
 
-  /** Wire an (id, vector) stream into the maintained index.
-    * Compaction auto-triggers past `compactAfterBatches` per-batch
-    * partitions — OUTSIDE the batch commit. */
+  /** Wire an (id, vector) stream into the maintained index. */
   def run(stream: DataFrame, idCol: String, vecCol: String,
           bands: Int, bitsPerBand: Int, dims: Int, storeDir: String,
           trigger: Trigger,
           compactAfterBatches: Int = 48): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        applyBatch(batch, bid, idCol, vecCol, bands, bitsPerBand, dims,
-          storeDir)
-        if (store(storeDir).partDirCount > compactAfterBatches) {
-          compact(batch.sparkSession, storeDir)
-          ()
-        }
-      }
+    runLoop(stream, storeDir, trigger, compactAfterBatches)(
+      applyBatch(_, _, idCol, vecCol, bands, bitsPerBand, dims, storeDir))
 }

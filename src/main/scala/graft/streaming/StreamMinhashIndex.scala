@@ -1,15 +1,12 @@
 package graft.streaming
 
 import graft.functions.TextAnalysis
-import graft.ops.{Dedup, DeltaPartsStore}
+import graft.ops.{Dedup, DeltaPartsStore, PinnedStore}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
   StructType}
-
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Streaming-maintained MinHash band INDEX — the near-dup dedup
   * family's corpus-side index ([[graft.ops.Dedup.bandKeyArray]] over
@@ -49,95 +46,39 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * geometry-validated read — must match LOUDLY. The tokenizer /
   * 3-shingle / affine-minhash parameters are the family's global
   * constants ([[graft.functions.TextAnalysis]]), not per-store knobs.
-  * Store mechanics are [[graft.ops.DeltaPartsStore]]'s. Verification
-  * reads the CORPUS (point lookups by candidate doc_id), not the
-  * index — the index answers candidate generation, the only part
-  * that is quadratic-shaped at scale.
+  * Store mechanics and the pin are [[graft.ops.DeltaPartsStore]]'s.
+  * Verification reads the CORPUS (point lookups by candidate doc_id),
+  * not the index — the index answers candidate generation, the only
+  * part that is quadratic-shaped at scale.
   *
   * Reference behavior context: the reference dedups exactly by txn
   * hash at ingest (src/be_txn.erl); near-dup families are the
   * training-pipeline extension (SURVEY §8).
   */
-object StreamMinhashIndex {
+object StreamMinhashIndex extends PinnedStore[Seq[Int]] {
 
-  val keySchema: StructType = StructType(Seq(
+  val schema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("band", IntegerType),
     StructField("bk", LongType)))
 
-  private def store(storeDir: String) =
-    new DeltaPartsStore(storeDir, keySchema, identity)
-
-  /** Applied-through batch id (-1 = empty store). */
-  def appliedBid(storeDir: String): Long = store(storeDir).appliedBid
+  protected val pin =
+    DeltaPartsStore.Pin.fields("geometry.txt", "bands", "rowsPerBand")
+  protected val artifactName = "minhash_maintained_keys"
+  protected def artifactParams(storeDir: String) = "bands"
 
   /** The folded index: committed (doc_id, band, bk) rows. */
   def keys(spark: SparkSession, storeDir: String): DataFrame =
-    store(storeDir).parts(spark)
-
-  /** Sidecar-folded content fingerprint — O(#batches) metadata; equal
-    * to a full-scan fingerprint of [[keys]] and invariant across
-    * [[compact]] (the DeltaPartsStore repack contract). */
-  def storeFingerprint(storeDir: String): String =
-    store(storeDir).storeFingerprint
-
-  private def geomPath(storeDir: String) = Paths.get(s"$storeDir/geometry.txt")
-
-  private def geomString(numBands: Int, rowsPerBand: Int) =
-    s"bands=$numBands,rowsPerBand=$rowsPerBand"
-
-  private val GeomRe = """bands=(\d+),rowsPerBand=(\d+)""".r
+    parts(spark, storeDir)
 
   /** The store's pinned band geometry as (numBands, rowsPerBand), or
-    * None for a store no apply has pinned yet — the read-side half of
-    * the pin: a query-side caller derives its own keys from THESE
-    * values (or [[requireGeometry]]-checks its own against them). A
-    * mismatched reader probing raw keys gets silently wrong
-    * candidates, the exact failure class the write pin refuses. */
-  def geometry(storeDir: String): Option[(Int, Int)] = {
-    val p = geomPath(storeDir)
-    if (!Files.exists(p)) None
-    else new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      .trim match {
-      case GeomRe(b, r) => Some((b.toInt, r.toInt))
-      case body => throw new IllegalStateException(
-        s"unparseable geometry pin at $p: '$body'")
-    }
-  }
+    * None for a store no apply has pinned yet. */
+  def geometry(storeDir: String): Option[(Int, Int)] =
+    pinned(storeDir).map { case Seq(b, r) => (b, r) }
 
-  /** Fail LOUDLY unless the store is pinned to exactly this geometry —
-    * the serve-path twin of the apply-path pin. */
   def requireGeometry(storeDir: String, numBands: Int,
-                      rowsPerBand: Int): Unit = {
-    val want = geomString(numBands, rowsPerBand)
-    val have = geometry(storeDir)
-      .map { case (b, r) => geomString(b, r) }
-      .getOrElse("<unpinned>")
-    require(have == want,
-      s"MinHash store $storeDir is pinned to geometry '$have'; " +
-        s"refusing to answer a query keyed under '$want' — a " +
-        "mismatched reader gets silently wrong candidates")
-  }
-
-  /** Pin-or-check the band geometry — first apply writes it, every
-    * later apply must match exactly. */
-  private def checkGeometry(storeDir: String, numBands: Int,
-                            rowsPerBand: Int): Unit = {
-    val want = geomString(numBands, rowsPerBand)
-    val p = geomPath(storeDir)
-    if (Files.exists(p)) {
-      // delegate to the one comparison the serve path uses too (the
-      // sibling stores' shape) — apply-side and serve-side refusal
-      // contracts cannot drift apart
-      requireGeometry(storeDir, numBands, rowsPerBand)
-    } else {
-      Files.createDirectories(Paths.get(storeDir))
-      val tmp = Paths.get(s"$storeDir/geometry.txt.tmp")
-      Files.write(tmp, want.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
+                      rowsPerBand: Int): Unit =
+    requirePinned(storeDir, Seq(numBands, rowsPerBand))
 
   /** The batch's (doc_id, band, bk) rows under this geometry — the
     * SAME derivation the inline dedup path keys with
@@ -180,52 +121,23 @@ object StreamMinhashIndex {
     * things twice). */
   private[graft] def applyKeys(keys: DataFrame, bid: Long,
                                numBands: Int, rowsPerBand: Int,
-                               storeDir: String): Unit = {
-    val st = store(storeDir)
-    if (bid <= st.appliedBid) return
-    checkGeometry(storeDir, numBands, rowsPerBand)
-    st.applyPart(keys, bid)
-  }
+                               storeDir: String): Unit =
+    commitPinned(storeDir, bid, Seq(numBands, rowsPerBand))(keys)
 
-  /** Repack every committed part — rows and store fingerprint
-    * preserved exactly. Returns true if rewritten. */
-  def compact(spark: SparkSession, storeDir: String,
-              minDirs: Int = 2): Boolean =
-    store(storeDir).compact(spark, minDirs)
-
-  /** Serve the maintained index through the artifact store,
-    * PART-ADDRESSED by the write-time sidecars (one part per committed
-    * batch; compaction collapses the part set). With no artifact root:
-    * the folded view directly. */
   def servedKeys(spark: SparkSession, storeDir: String): DataFrame =
-    store(storeDir).serveParts(spark, "minhash_maintained_keys",
-      params = "bands")
+    served(spark, storeDir)
 
-  /** [[servedKeys]] with the caller's geometry REQUIRE-MATCHED against
-    * the store pin first — the serve path any query that derived its
-    * own band keys should use: the raw overload trusts the caller
-    * already validated. */
+  /** The validated serve path any query that derived its own band keys
+    * should use. */
   def servedKeys(spark: SparkSession, storeDir: String, numBands: Int,
-                 rowsPerBand: Int): DataFrame = {
-    requireGeometry(storeDir, numBands, rowsPerBand)
-    servedKeys(spark, storeDir)
-  }
+                 rowsPerBand: Int): DataFrame =
+    served(spark, storeDir, Seq(numBands, rowsPerBand))
 
-  /** Wire an (id, text) document stream into the maintained index.
-    * Compaction auto-triggers past `compactAfterBatches` per-batch
-    * partitions — OUTSIDE the batch commit. */
+  /** Wire an (id, text) document stream into the maintained index. */
   def run(stream: DataFrame, idCol: String, textCol: String,
           numBands: Int, rowsPerBand: Int, storeDir: String,
           trigger: Trigger,
           compactAfterBatches: Int = 48): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        applyBatch(batch, bid, idCol, textCol, numBands, rowsPerBand,
-          storeDir)
-        if (store(storeDir).partDirCount > compactAfterBatches) {
-          compact(batch.sparkSession, storeDir)
-          ()
-        }
-      }
+    runLoop(stream, storeDir, trigger, compactAfterBatches)(
+      applyBatch(_, _, idCol, textCol, numBands, rowsPerBand, storeDir))
 }

@@ -1,14 +1,11 @@
 package graft.streaming
 
 import graft.functions.TextAnalysis
-import graft.ops.DeltaPartsStore
+import graft.ops.{DeltaPartsStore, PinnedStore}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Streaming-maintained SimHash SIGNATURE index — the bit-sketch
   * dedup family's corpus-side state (q26's per-doc
@@ -34,11 +31,11 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * 100 TB-default 60/4 wide sketch (q402's measured density fix)
   * coexist as mutually-refusing stores, and a store written by a code
   * version with different constants is refused by name. Store
-  * mechanics are [[graft.ops.DeltaPartsStore]]'s.
+  * mechanics and the pin are [[graft.ops.DeltaPartsStore]]'s.
   */
-object StreamSimhashIndex {
+object StreamSimhashIndex extends PinnedStore[Seq[Int]] {
 
-  val sigSchema: StructType = StructType(Seq(
+  val schema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("simhash", LongType)))
 
@@ -56,6 +53,15 @@ object StreamSimhashIndex {
   val WideBits = 60
   val WideBlocks = 4
 
+  protected val pin =
+    DeltaPartsStore.Pin.fields("geometry.txt", "bits", "blocks")
+  protected val artifactName = "simhash_maintained_sigs"
+
+  /** The artifact params carry the PINNED bit width, so a 32-bit and a
+    * wide store can never collide on one artifact scope. */
+  protected def artifactParams(storeDir: String) =
+    s"sig${pinned(storeDir).map(_.head).getOrElse(Bits)}"
+
   /** The signing kernel for a pinned bit width — refuses an
     * ungeometried width by name (a silently-wrong kernel would sign a
     * DIFFERENT sketch under the store's pin). */
@@ -68,67 +74,17 @@ object StreamSimhashIndex {
       s"no simhash kernel for bits=$b — house geometries are 32 and 60")
   }
 
-  private def store(storeDir: String) =
-    new DeltaPartsStore(storeDir, sigSchema, identity)
-
-  /** Applied-through batch id (-1 = empty store). */
-  def appliedBid(storeDir: String): Long = store(storeDir).appliedBid
-
   /** The folded index: committed (doc_id, simhash) rows. */
   def sigs(spark: SparkSession, storeDir: String): DataFrame =
-    store(storeDir).parts(spark)
-
-  /** Sidecar-folded content fingerprint — O(#batches) metadata; equal
-    * to a full-scan fingerprint of [[sigs]] and invariant across
-    * [[compact]]. */
-  def storeFingerprint(storeDir: String): String =
-    store(storeDir).storeFingerprint
-
-  private def geomPath(storeDir: String) = Paths.get(s"$storeDir/geometry.txt")
-
-  private def geomString(bits: Int, blocks: Int) =
-    s"bits=$bits,blocks=$blocks"
-
-  private val GeomRe = """bits=(\d+),blocks=(\d+)""".r
+    parts(spark, storeDir)
 
   /** The store's pinned (bits, blocks), or None for a store no apply
     * has pinned yet. */
-  def geometry(storeDir: String): Option[(Int, Int)] = {
-    val p = geomPath(storeDir)
-    if (!Files.exists(p)) None
-    else new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      .trim match {
-      case GeomRe(b, k) => Some((b.toInt, k.toInt))
-      case body => throw new IllegalStateException(
-        s"unparseable geometry pin at $p: '$body'")
-    }
-  }
+  def geometry(storeDir: String): Option[(Int, Int)] =
+    pinned(storeDir).map { case Seq(b, k) => (b, k) }
 
-  /** Fail LOUDLY unless the store is pinned to exactly this geometry. */
-  def requireGeometry(storeDir: String, bits: Int, blocks: Int): Unit = {
-    val want = geomString(bits, blocks)
-    val have = geometry(storeDir)
-      .map { case (b, k) => geomString(b, k) }
-      .getOrElse("<unpinned>")
-    require(have == want,
-      s"SimHash store $storeDir is pinned to geometry '$have'; " +
-        s"refusing a reader keyed under '$want' — signatures under a " +
-        "different bit geometry are a different sketch entirely")
-  }
-
-  private def checkGeometry(storeDir: String, bits: Int,
-                            blocks: Int): Unit = {
-    val p = geomPath(storeDir)
-    if (Files.exists(p)) requireGeometry(storeDir, bits, blocks)
-    else {
-      Files.createDirectories(Paths.get(storeDir))
-      val tmp = Paths.get(s"$storeDir/geometry.txt.tmp")
-      Files.write(tmp,
-        geomString(bits, blocks).getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
+  def requireGeometry(storeDir: String, bits: Int, blocks: Int): Unit =
+    requirePinned(storeDir, Seq(bits, blocks))
 
   /** Apply one batch: sign the batch's docs under the store's pinned
     * geometry, commit the part + sidecar, move the watermark.
@@ -138,42 +94,19 @@ object StreamSimhashIndex {
   private[graft] def applyBatch(batch: DataFrame, bid: Long,
                                 idCol: String, textCol: String,
                                 storeDir: String, bits: Int = Bits,
-                                blocks: Int = Blocks): Unit = {
-    val st = store(storeDir)
-    if (bid <= st.appliedBid) return
-    checkGeometry(storeDir, bits, blocks)
-    st.applyPart(
+                                blocks: Int = Blocks): Unit =
+    commitPinned(storeDir, bid, Seq(bits, blocks))(
       batch.where(col(textCol).isNotNull)
         .select(col(idCol).cast("long").as("doc_id"),
           signExpr(bits, TextAnalysis.tokens(col(textCol)))
-            .as("simhash")),
-      bid)
-  }
+            .as("simhash")))
 
-  /** Repack every committed part — rows and store fingerprint
-    * preserved exactly. Returns true if rewritten. */
-  def compact(spark: SparkSession, storeDir: String,
-              minDirs: Int = 2): Boolean =
-    store(storeDir).compact(spark, minDirs)
+  def servedSigs(spark: SparkSession, storeDir: String): DataFrame =
+    served(spark, storeDir)
 
-  /** Serve the maintained signatures through the artifact store,
-    * PART-ADDRESSED by the write-time sidecars. With no artifact
-    * root: the folded view directly. The artifact params carry the
-    * PINNED bit width, so a 32-bit and a wide store can never collide
-    * on one artifact scope. */
-  def servedSigs(spark: SparkSession, storeDir: String): DataFrame = {
-    val bits = geometry(storeDir).map(_._1).getOrElse(Bits)
-    store(storeDir).serveParts(spark, "simhash_maintained_sigs",
-      params = s"sig$bits")
-  }
-
-  /** [[servedSigs]] with the caller's geometry REQUIRE-MATCHED against
-    * the store pin first. */
   def servedSigs(spark: SparkSession, storeDir: String, bits: Int,
-                 blocks: Int): DataFrame = {
-    requireGeometry(storeDir, bits, blocks)
-    servedSigs(spark, storeDir)
-  }
+                 blocks: Int): DataFrame =
+    served(spark, storeDir, Seq(bits, blocks))
 
   /** The Manku block projection over a signature frame — one
     * (doc_id, simhash, blk, key) row per blocking slice, derived at
@@ -184,20 +117,11 @@ object StreamSimhashIndex {
               blocks: Int = Blocks): DataFrame =
     graft.ops.Dedup.simhashBlocked(sigs, blocks, bits / blocks)
 
-  /** Wire an (id, text) document stream into the maintained index.
-    * Compaction auto-triggers past `compactAfterBatches` per-batch
-    * partitions — OUTSIDE the batch commit. */
+  /** Wire an (id, text) document stream into the maintained index. */
   def run(stream: DataFrame, idCol: String, textCol: String,
           storeDir: String, trigger: Trigger,
           compactAfterBatches: Int = 48, bits: Int = Bits,
           blocks: Int = Blocks): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        applyBatch(batch, bid, idCol, textCol, storeDir, bits, blocks)
-        if (store(storeDir).partDirCount > compactAfterBatches) {
-          compact(batch.sparkSession, storeDir)
-          ()
-        }
-      }
+    runLoop(stream, storeDir, trigger, compactAfterBatches)(
+      applyBatch(_, _, idCol, textCol, storeDir, bits, blocks))
 }

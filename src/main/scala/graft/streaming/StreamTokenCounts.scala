@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.functions.TextAnalysis.tokens
-import graft.ops.DeltaPartsStore
+import graft.ops.MaintainedStore
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -34,80 +34,41 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField,
   *    rows must re-address, because its input rows really did change.
   *    What is preserved — and spec-pinned — is the folded view.
   */
-object StreamTokenCounts {
+object StreamTokenCounts extends MaintainedStore {
 
-  val countSchema: StructType = StructType(Seq(
+  val schema: StructType = StructType(Seq(
     StructField("source", StringType),
     StructField("token", StringType),
     StructField("n", LongType)))
 
-  private def store(storeDir: String) =
-    new DeltaPartsStore(storeDir, countSchema,
-      merged => merged.groupBy(col("source"), col("token"))
-        .agg(sum(col("n")).as("n")))
+  private def sumByKey(rows: DataFrame): DataFrame =
+    rows.groupBy(col("source"), col("token")).agg(sum(col("n")).as("n"))
 
-  /** Applied-through batch id (-1 = empty store). */
-  def appliedBid(storeDir: String): Long = store(storeDir).appliedBid
-
-  /** Committed per-part rows: partitions at or below the meta
-    * watermark — a torn later batch is invisible (the BlockIngest
-    * reader rule). */
-  def parts(spark: SparkSession, storeDir: String): DataFrame =
-    store(storeDir).parts(spark)
+  override protected def compactRewrite: DataFrame => DataFrame = sumByKey
 
   /** The folded view: corpus (source, token) counts — a group-sum over
     * the PRE-AGGREGATED parts (#batches × batch-vocab input rows). */
   def counts(spark: SparkSession, storeDir: String): DataFrame =
-    parts(spark, storeDir)
-      .groupBy(col("source"), col("token"))
-      .agg(sum(col("n")).as("n"))
-
-  /** Content fingerprint of the committed part rows from the
-    * write-time sidecars — O(#batches) metadata, no scan; equal to a
-    * full-scan fingerprint of [[parts]] (spec-pinned). Changes across
-    * [[compact]] — correctly, because compaction merges rows. */
-  def storeFingerprint(storeDir: String): String =
-    store(storeDir).storeFingerprint
+    sumByKey(parts(spark, storeDir))
 
   /** Apply one batch: pre-aggregate, commit the part + sidecar, move
-    * the watermark. Exposed for the spec's slicing experiments. */
+    * the watermark. A replayed bid is a no-op. Exposed for the spec's
+    * slicing experiments. */
   private[graft] def applyBatch(batch: DataFrame, bid: Long,
                                 srcCol: String, textCol: String,
-                                storeDir: String): Unit = {
-    val st = store(storeDir)
-    if (bid <= st.appliedBid) return // replay is a no-op
-    st.applyPart(batch
+                                storeDir: String): Unit =
+    commit(storeDir, bid)(batch
       .where(col(textCol).isNotNull) // poison-row rule: null text drops
       .select(coalesce(col(srcCol), lit("")).as("source"),
         explode(tokens(col(textCol))).as("token"))
       .groupBy(col("source"), col("token"))
-      .agg(count(lit(1)).as("n")), bid)
-  }
-
-  /** Merge every committed part into ONE group-summed partition behind
-    * the two-atomic-rename discipline (crash at any point leaves the
-    * fragmented or the merged store, never a mixture). The folded view
-    * is preserved EXACTLY; the stored rows — and so the fingerprint —
-    * change, which is the honest signal to downstream artifacts.
-    * Returns true if the store was rewritten. */
-  def compact(spark: SparkSession, storeDir: String,
-              minDirs: Int = 2): Boolean =
-    store(storeDir).compact(spark, minDirs)
+      .agg(count(lit(1)).as("n")))
 
   /** Wire a (source, text) document stream into the maintained count
-    * store. Compaction auto-triggers past `compactAfterBatches`
-    * per-batch partitions — OUTSIDE the batch commit, so a compaction
-    * failure never loses a batch. */
+    * store. */
   def run(stream: DataFrame, srcCol: String, textCol: String,
           storeDir: String, trigger: Trigger,
           compactAfterBatches: Int = 48): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        applyBatch(batch, bid, srcCol, textCol, storeDir)
-        if (store(storeDir).partDirCount > compactAfterBatches) {
-          compact(batch.sparkSession, storeDir)
-          ()
-        }
-      }
+    runLoop(stream, storeDir, trigger, compactAfterBatches)(
+      applyBatch(_, _, srcCol, textCol, storeDir))
 }

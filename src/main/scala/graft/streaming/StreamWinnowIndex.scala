@@ -1,13 +1,10 @@
 package graft.streaming
 
-import graft.ops.{Decontaminate, DeltaPartsStore}
+import graft.ops.{Decontaminate, DeltaPartsStore, PinnedStore}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Streaming-maintained winnowing-fingerprint INDEX — the
   * decontamination family's corpus-side index ([[graft.ops
@@ -33,89 +30,41 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *    sidecar: steady-state growth costs O(new batch) per serve and a
   *    re-serve is a pure multi-path scan.
   *
-  * Store mechanics (partition + sidecar + meta-last commit,
-  * two-rename compaction, crash recovery) are
+  * Fingerprints written under one (k, w) are meaningless under
+  * another, so the store pins `geometry.txt` like its siblings. Store
+  * mechanics (partition + sidecar + meta-last commit, two-rename
+  * compaction, crash recovery) and the pin are
   * [[graft.ops.DeltaPartsStore]]'s.
   */
-object StreamWinnowIndex {
+object StreamWinnowIndex extends PinnedStore[Seq[Int]] {
 
-  val fpSchema: StructType = StructType(Seq(
+  val schema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("fp", LongType)))
 
   /** Winnowing parameters — lockstep with [[graft.ops.Decontaminate]]'s
     * defaults (k-token grams, w-wide windows: any shared verbatim run
-    * of >= w+k-1 = 8 tokens is detected). */
+    * of >= w+k-1 = 8 tokens is detected). Module constants, so the pin
+    * protects the store across code versions, not calls. */
   val K = 5
   val W = 4
 
-  private def store(storeDir: String) =
-    new DeltaPartsStore(storeDir, fpSchema, identity)
-
-  // ---- identity pin (the LSH/MinHash/IVF stores' discipline) ----
-  // K/W are module constants, so an IN-PROCESS mismatch cannot happen
-  // today — the pin protects the store across TIME: fingerprints
-  // written under one (k, w) are meaningless under another, and a
-  // store outlives code versions at 100 TB. First apply pins, every
-  // later apply and every validated read must match LOUDLY.
-
-  private def geomPath(storeDir: String) = Paths.get(s"$storeDir/geometry.txt")
-
-  private def geomString(k: Int, w: Int) = s"k=$k,w=$w"
-
-  private val GeomRe = """k=(\d+),w=(\d+)""".r
-
-  /** The store's pinned (k, w), or None for a store no apply has
-    * pinned yet — what an offline reader validates against. */
-  def geometry(storeDir: String): Option[(Int, Int)] = {
-    val p = geomPath(storeDir)
-    if (!Files.exists(p)) None
-    else new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      .trim match {
-      case GeomRe(k, w) => Some((k.toInt, w.toInt))
-      case body => throw new IllegalStateException(
-        s"unparseable geometry pin at $p: '$body'")
-    }
-  }
-
-  /** Fail LOUDLY unless the store is pinned to exactly this (k, w). */
-  def requireGeometry(storeDir: String, k: Int, w: Int): Unit = {
-    val want = geomString(k, w)
-    val have = geometry(storeDir)
-      .map { case (kk, ww) => geomString(kk, ww) }
-      .getOrElse("<unpinned>")
-    require(have == want,
-      s"winnow store $storeDir is pinned to geometry '$have'; " +
-        s"refusing a reader keyed under '$want' — fingerprints under " +
-        "a different (k, w) are a different selection entirely")
-  }
-
-  private def checkGeometry(storeDir: String): Unit = {
-    val p = geomPath(storeDir)
-    if (Files.exists(p)) requireGeometry(storeDir, K, W)
-    else {
-      Files.createDirectories(Paths.get(storeDir))
-      val tmp = Paths.get(s"$storeDir/geometry.txt.tmp")
-      Files.write(tmp, geomString(K, W).getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-
-  /** Applied-through batch id (-1 = empty store). */
-  def appliedBid(storeDir: String): Long = store(storeDir).appliedBid
+  protected val pin = DeltaPartsStore.Pin.fields("geometry.txt", "k", "w")
+  protected val artifactName = "winnow_maintained_fps"
+  protected def artifactParams(storeDir: String) = s"k=$K,w=$W"
 
   /** The folded index: committed (doc_id, fp) rows — a plain union of
     * the per-batch parts, no aggregation (fingerprints are per-doc). */
   def fps(spark: SparkSession, storeDir: String): DataFrame =
-    store(storeDir).parts(spark)
+    parts(spark, storeDir)
 
-  /** Content fingerprint of the committed index rows from the
-    * write-time sidecars — O(#batches) metadata, no scan; equal to a
-    * full-scan fingerprint of [[fps]] AND invariant across [[compact]]
-    * (both spec-pinned). */
-  def storeFingerprint(storeDir: String): String =
-    store(storeDir).storeFingerprint
+  /** The store's pinned (k, w), or None for a store no apply has
+    * pinned yet — what an offline reader validates against. */
+  def geometry(storeDir: String): Option[(Int, Int)] =
+    pinned(storeDir).map { case Seq(k, w) => (k, w) }
+
+  def requireGeometry(storeDir: String, k: Int, w: Int): Unit =
+    requirePinned(storeDir, Seq(k, w))
 
   /** Apply one batch: winnow the batch's docs, commit the part +
     * sidecar, move the watermark. Null-text rows drop (poison-row
@@ -123,58 +72,25 @@ object StreamWinnowIndex {
     * experiments. */
   private[graft] def applyBatch(batch: DataFrame, bid: Long,
                                 idCol: String, textCol: String,
-                                storeDir: String): Unit = {
-    val st = store(storeDir)
-    if (bid <= st.appliedBid) return
-    checkGeometry(storeDir)
-    st.applyPart(
+                                storeDir: String): Unit =
+    commitPinned(storeDir, bid, Seq(K, W))(
       Decontaminate.fingerprints(
         batch.where(col(textCol).isNotNull), idCol, textCol, K, W)
-        .select(col("doc_id").cast("long").as("doc_id"), col("fp")),
-      bid)
-  }
+        .select(col("doc_id").cast("long").as("doc_id"), col("fp")))
 
-  /** Repack every committed part into ONE partition (two-atomic-rename,
-    * crash-recoverable). Rows — and the store fingerprint — are
-    * preserved exactly. Returns true if the store was rewritten. */
-  def compact(spark: SparkSession, storeDir: String,
-              minDirs: Int = 2): Boolean =
-    store(storeDir).compact(spark, minDirs)
-
-  /** Serve the maintained index through the artifact store,
-    * PART-ADDRESSED: each committed `bid=N` partition is its own
-    * artifact part keyed by its write-time sidecar, so an append
-    * copies one batch's rows, a re-serve is a multi-path parquet scan,
-    * and compaction collapses the part set to one rollup (vacuuming
-    * the departed batch parts on that committing serve). With no
-    * artifact root: the folded view directly. */
   def servedFps(spark: SparkSession, storeDir: String): DataFrame =
-    store(storeDir).serveParts(spark, "winnow_maintained_fps",
-      params = s"k=$K,w=$W")
+    served(spark, storeDir)
 
-  /** [[servedFps]] with the caller's (k, w) REQUIRE-MATCHED against
-    * the store pin first — the serve path for a reader that derived
-    * its own query-side fingerprints. */
+  /** The validated serve path for a reader that derived its own
+    * query-side fingerprints. */
   def servedFps(spark: SparkSession, storeDir: String, k: Int,
-                w: Int): DataFrame = {
-    requireGeometry(storeDir, k, w)
-    servedFps(spark, storeDir)
-  }
+                w: Int): DataFrame =
+    served(spark, storeDir, Seq(k, w))
 
-  /** Wire an (id, text) document stream into the maintained index.
-    * Compaction auto-triggers past `compactAfterBatches` per-batch
-    * partitions — OUTSIDE the batch commit, so a compaction failure
-    * never loses a batch. */
+  /** Wire an (id, text) document stream into the maintained index. */
   def run(stream: DataFrame, idCol: String, textCol: String,
           storeDir: String, trigger: Trigger,
           compactAfterBatches: Int = 48): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        applyBatch(batch, bid, idCol, textCol, storeDir)
-        if (store(storeDir).partDirCount > compactAfterBatches) {
-          compact(batch.sparkSession, storeDir)
-          ()
-        }
-      }
+    runLoop(stream, storeDir, trigger, compactAfterBatches)(
+      applyBatch(_, _, idCol, textCol, storeDir))
 }

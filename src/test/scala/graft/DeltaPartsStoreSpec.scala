@@ -201,4 +201,108 @@ class DeltaPartsStoreSpec extends SparkSpec {
     assert(intercept[IllegalStateException](
       st.committedPartAt(0L)("bid=oops")).getMessage.contains("bid=oops"))
   }
+
+  // ---- the identity pin shared by the six pinned maintained stores ----
+
+  private lazy val pinDocs: DataFrame = Seq(
+    1L -> "alpha beta gamma delta epsilon zeta eta theta",
+    2L -> "one two three four five six seven eight nine ten",
+    3L -> "alpha beta gamma delta plus some other words here").toDF(
+    "doc_id", "text")
+
+  private lazy val pinVecs: DataFrame = Seq(
+    1L -> Seq(0.5f, -1.0f, 0.25f, 2.0f),
+    2L -> Seq(-0.5f, 1.0f, 0.75f, -2.0f)).toDF("vec_id", "embedding")
+
+  private val pinCents: Array[Array[Double]] = Array(
+    Array(0.5, -1.25, 3.0, 0.1), Array(-0.3, 2.0, 1e-9, 7.0))
+
+  private def pinDir(): String =
+    Files.createTempDirectory("pin").toString + "/s"
+
+  private def bytesAt(dir: String, file: String): String =
+    new String(Files.readAllBytes(java.nio.file.Paths.get(s"$dir/$file")),
+      java.nio.charset.StandardCharsets.UTF_8)
+
+  test("golden pin bytes: each pinned store, applied once under a " +
+    "fixed geometry, writes exactly these literal pin files") {
+    import graft.streaming._
+    val lsh = pinDir()
+    StreamLshIndex.applyBatch(pinVecs, 0L, "vec_id", "embedding", 2, 3, 4,
+      lsh)
+    assert(bytesAt(lsh, "geometry.txt") === "bands=2,bitsPerBand=3,dims=4")
+    val sim = pinDir()
+    StreamSimhashIndex.applyBatch(pinDocs, 0L, "doc_id", "text", sim)
+    assert(bytesAt(sim, "geometry.txt") === "bits=32,blocks=4")
+    val wide = pinDir()
+    StreamSimhashIndex.applyBatch(pinDocs, 0L, "doc_id", "text", wide,
+      60, 4)
+    assert(bytesAt(wide, "geometry.txt") === "bits=60,blocks=4")
+    val mh = pinDir()
+    StreamMinhashIndex.applyBatch(pinDocs, 0L, "doc_id", "text", 12, 2, mh)
+    assert(bytesAt(mh, "geometry.txt") === "bands=12,rowsPerBand=2")
+    val ivf = pinDir()
+    StreamIvfIndex.applyBatch(pinVecs, 0L, "vec_id", "embedding",
+      pinCents, 1, ivf)
+    assert(bytesAt(ivf, "centroids.txt") ===
+      "probes=1,k=2,dims=4\n0.5,-1.25,3.0,0.1\n-0.3,2.0,1.0E-9,7.0")
+    val win = pinDir()
+    StreamWinnowIndex.applyBatch(pinDocs, 0L, "doc_id", "text", win)
+    assert(bytesAt(win, "geometry.txt") === "k=5,w=4")
+    val hash = pinDir()
+    StreamContainIndex.applyBatch(pinDocs, 0L, "doc_id", "text", hash)
+    assert(bytesAt(hash, "geometry.txt") === "shingles=3,order=hash")
+    assert(!Files.exists(java.nio.file.Paths.get(s"$hash/hotset.txt")),
+      "a hash-order store pins no hot list")
+    val hot = pinDir()
+    StreamContainIndex.applyBatch(pinDocs, 0L, "doc_id", "text", hot,
+      Seq(11L, 22L))
+    assert(bytesAt(hot, "hotset.txt") === "11,22")
+    assert(bytesAt(hot, "geometry.txt") === "shingles=3,order=hotband," +
+      "n=2,h=c179a368056293632962f32c3c892a97")
+  }
+
+  test("a leftover <pin>.tmp with no pin file (a crash before the " +
+    "rename) reads as unpinned, and the next apply pins the store") {
+    import graft.streaming.{StreamIvfIndex, StreamLshIndex}
+    val lsh = pinDir()
+    Files.createDirectories(java.nio.file.Paths.get(lsh))
+    Files.write(java.nio.file.Paths.get(s"$lsh/geometry.txt.tmp"),
+      "bands=9,bit".getBytes("UTF-8"))
+    assert(StreamLshIndex.geometry(lsh).isEmpty,
+      "a torn tmp is not a pin")
+    StreamLshIndex.applyBatch(pinVecs, 0L, "vec_id", "embedding", 2, 3, 4,
+      lsh)
+    assert(StreamLshIndex.geometry(lsh) === Some((2, 3, 4)))
+    assert(bytesAt(lsh, "geometry.txt") === "bands=2,bitsPerBand=3,dims=4")
+    assert(!Files.exists(java.nio.file.Paths.get(s"$lsh/geometry.txt.tmp")),
+      "the pin write renames its tmp away")
+    val ivf = pinDir()
+    Files.createDirectories(java.nio.file.Paths.get(ivf))
+    Files.write(java.nio.file.Paths.get(s"$ivf/centroids.txt.tmp"),
+      "probes=1,k=2,dims=4\n0.5".getBytes("UTF-8"))
+    assert(StreamIvfIndex.centroids(ivf).isEmpty)
+    StreamIvfIndex.applyBatch(pinVecs, 0L, "vec_id", "embedding",
+      pinCents, 1, ivf)
+    assert(StreamIvfIndex.centroids(ivf).map(_._2) === Some(1))
+  }
+
+  test("an unparseable pin is refused by every pinned accessor with an " +
+    "error naming the pin file's path") {
+    import graft.streaming._
+    def corrupt(file: String)(read: String => Any): Unit = {
+      val dir = pinDir()
+      Files.createDirectories(java.nio.file.Paths.get(dir))
+      Files.write(java.nio.file.Paths.get(s"$dir/$file"),
+        "bands=two".getBytes("UTF-8"))
+      val e = intercept[IllegalStateException](read(dir))
+      assert(e.getMessage.contains(s"$dir/$file"),
+        s"the refusal must name the pin path: ${e.getMessage}")
+    }
+    corrupt("geometry.txt")(StreamLshIndex.geometry)
+    corrupt("geometry.txt")(StreamSimhashIndex.geometry)
+    corrupt("geometry.txt")(StreamMinhashIndex.geometry)
+    corrupt("geometry.txt")(StreamWinnowIndex.geometry)
+    corrupt("centroids.txt")(StreamIvfIndex.centroids)
+  }
 }
