@@ -1,10 +1,12 @@
 package graft.fixtures
 
 import graft.functions.Codecs
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.ops.Fs
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import scala.collection.mutable
 import scala.util.Random
+import scala.util.chaining._
 
 /** Deterministic block-fixture generator (FIXTURES.md §A).
   *
@@ -366,6 +368,12 @@ object FixtureGen {
     }
   }
 
+  /** One fixture table: a single parquet file `<name>.parquet` under
+    * [[FixtureDir]]. */
+  private def save(name: String)(df: DataFrame): Unit =
+    Fs.writer(df.coalesce(1)).mode(SaveMode.Overwrite)
+      .parquet(s"$FixtureDir/$name.parquet")
+
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
@@ -379,13 +387,11 @@ object FixtureGen {
 
     blocks.toDF("height", "time", "block_hash", "prev_hash", "election_epoch",
         "epoch_start", "hbbft_round", "snapshot_hash")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$FixtureDir/blocks.parquet")
+      .pipe(save("blocks"))
 
     txns.map(t => (t.block, t.hash, t.typ, t.time, t.fields))
       .toDF("block", "hash", "type", "time", "fields")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$FixtureDir/transactions.parquet")
+      .pipe(save("transactions"))
 
     // blocks.jsonl — stream input for the ordered ingest driver
     val txnsByBlock = txns.groupBy(_.block)
@@ -422,8 +428,7 @@ object FixtureGen {
         rnd.nextInt(100).toLong, rnd.nextInt(500000).toLong,
         rnd.nextInt(1000000).toLong))
       .toDF("address", "balance", "nonce", "dc_balance", "security_balance")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$FixtureDir/ledger_accounts.parquet")
+      .pipe(save("ledger_accounts"))
 
     val locRnd = new Random(11)
     val gwLocs = gateways.map(_ => h3Cell(locRnd))
@@ -433,15 +438,13 @@ object FixtureGen {
         locRnd.nextInt(500).toLong,
         if (i % 7 == 0) "dataonly" else "full")
     }.toDF("address", "owner", "location", "name", "gain", "elevation", "mode")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$FixtureDir/ledger_gateways.parquet")
+      .pipe(save("ledger_gateways"))
 
     validators.zipWithIndex.map { case (v, i) =>
       (v, accounts((i * 3) % accounts.size), 1000000000L,
         Codecs.animalName(v), if (i % 4 == 0) "unstaked" else "staked")
     }.toDF("address", "owner", "stake", "name", "status")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$FixtureDir/ledger_validators.parquet")
+      .pipe(save("ledger_validators"))
 
     // locations — deterministic fake geocodes keyed by h3 (geocoder
     // stub output, ref: src/be_db_geocoder.erl:194-225). The LAST THREE
@@ -458,8 +461,7 @@ object FixtureGen {
         37.0 + i * 0.01, -122.0 - i * 0.01)
     }.toDF("location", "long_street", "short_street", "long_city", "short_city",
         "long_state", "short_state", "long_country", "short_country", "lat", "lon")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$FixtureDir/locations.parquet")
+      .pipe(save("locations"))
 
     // pending transactions — protobuf-decode stand-in: a fake binary
     // wire format with planted corrupt rows for the dead-letter path
@@ -478,8 +480,7 @@ object FixtureGen {
       (i.toLong, created, data)
     }
     pending.toDF("pending_id", "created_at", "data")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$FixtureDir/pending_txns.parquet")
+      .pipe(save("pending_txns"))
 
     // peer-book sidecar — libp2p peer metadata stub
     // (ref: src/be_peer_status.erl:20-68); ~70% of validators have an
@@ -492,8 +493,7 @@ object FixtureGen {
         1600000000L + pbRnd.nextInt(3600))
     }.toDF("address", "peer_height", "listen_addr", "grpc_addr",
         "release_version", "peer_time")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$FixtureDir/peerbook.parquet")
+      .pipe(save("peerbook"))
 
     // media fixtures — deterministic fake containers for the multimodal
     // operators (see ops/Multimodal.scala): ASCII header + base64-ASCII
@@ -529,8 +529,7 @@ object FixtureGen {
         (header + payload).getBytes("US-ASCII"))
     }
     media.toDF("media_id", "doc_id", "kind", "bytes")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$FixtureDir/media.parquet")
+      .pipe(save("media"))
 
     // raw_docs — paragraph-structured web-crawl stand-in for the
     // pipeline operators the word-soup `documents` table cannot
@@ -593,8 +592,7 @@ object FixtureGen {
         picks.map(paraPool).mkString("\n\n"))
     }
     rawDocs.toDF("doc_id", "source", "url", "text")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$FixtureDir/raw_docs.parquet")
+      .pipe(save("raw_docs"))
 
     println(s"[fixtures] blocks=${blocks.size} txns=${txns.size} " +
       s"types=${txns.map(_.typ).distinct.size} media=${media.size} " +

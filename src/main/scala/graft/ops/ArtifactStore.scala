@@ -188,15 +188,15 @@ object ArtifactStore {
     * sidecar that silently never matches a re-scan. */
   def writeWithFingerprint(df: DataFrame, path: String): (BigInt, Long) = {
     if (!fingerprintBitExact(df.schema)) {
-      df.write.mode("overwrite").parquet(path)
+      Fs.writer(df).mode("overwrite").parquet(path)
       return partFingerprint(df.sparkSession.read.parquet(path))
     }
     val obs = org.apache.spark.sql.Observation()
-    df.observe(obs,
+    Fs.writer(df.observe(obs,
         sum(xxhash64(df.columns.map(col).toIndexedSeq: _*)
           .cast(DecimalType(38, 0))).as("s"),
-        count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(path)
+        count(lit(1)).as("n")))
+      .mode("overwrite").parquet(path)
     val m = obs.get
     metricFp(m("s"), m("n"))
   }
@@ -307,13 +307,8 @@ object ArtifactStore {
                   fp: (BigInt, Long)): Unit = {
     require(SafePartId.matches(part),
       s"unsafe sidecar part id '$part' — allowed: [A-Za-z0-9=_.-]+")
-    val d = Paths.get(s"$storeDir/_fp")
-    Files.createDirectories(d)
-    val body = s"""{"part":"$part","sum":"${fp._1}","n":${fp._2}}"""
-    val tmp = d.resolve(s"$part.json.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, d.resolve(s"$part.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    DeltaPartsStore.writeAtomic(Paths.get(s"$storeDir/_fp/$part.json"),
+      s"""{"part":"$part","sum":"${fp._1}","n":${fp._2}}""")
   }
 
   private val FpPartRe =
@@ -560,7 +555,7 @@ object ArtifactStore {
         case None =>
           buildCount.incrementAndGet()
           val payload = s"payload-${java.util.UUID.randomUUID}"
-          build.write.mode("overwrite").parquet(s"$dir/$payload")
+          Fs.writer(build).mode("overwrite").parquet(s"$dir/$payload")
           writeManifest(dir, name, fp, params, payload)
           logEvent(root, name, fp, params, "build", cfg)
           vacuumOrphanPayloads(dir, keep = payload)

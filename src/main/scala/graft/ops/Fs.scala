@@ -1,14 +1,18 @@
 package graft.ops
 
+import org.apache.spark.sql.{DataFrameWriter, Dataset}
+
 import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
-/** Closed-stream directory listing. `Files.list`/`Files.walk` return
-  * lazy streams backed by an open directory handle; materializing
-  * through `.iterator().asScala` without closing leaks one handle per
-  * call — fatal in a long-running follower that re-lists the commit
-  * manifest every batch. These helpers materialize eagerly and close.
+/** Local file-system helpers: the engine's one parquet writer
+  * ([[writer]]) and closed-stream directory listing. `Files.list`/
+  * `Files.walk` return lazy streams backed by an open directory handle;
+  * materializing through `.iterator().asScala` without closing leaks
+  * one handle per call — fatal in a long-running follower that re-lists
+  * the commit manifest every batch. These helpers materialize eagerly
+  * and close.
   */
 object Fs {
 
@@ -41,4 +45,19 @@ object Fs {
     * reset). */
   def wipe(dir: String): Unit =
     deleteRec(java.nio.file.Paths.get(dir))
+
+  /** `ds.write` for every parquet write the engine makes: `file:`
+    * paths resolve to [[NioLocalFileSystem]], which sets modes through
+    * java.nio instead of forking `chmod` per created file and
+    * directory. The two options reach only the Hadoop conf of THIS
+    * write's job and tasks (Spark copies writer options into it); the
+    * file-system cache is bypassed for that conf, since its key ignores
+    * the implementation class and would hand back the cached default
+    * one. Other schemes are untouched. */
+  def writer[T](ds: Dataset[T]): DataFrameWriter[T] =
+    ds.write.options(WriterOptions)
+
+  private val WriterOptions = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
 }

@@ -167,10 +167,14 @@ object Inventory {
     // the bucket function is part of the state's on-disk layout: a
     // drifted nBuckets would hash keys into different buckets than the
     // stored rows, duplicating keys and resurrecting stale rows with no
-    // error — pin it at first write, validate on every merge
+    // error — pinned before the store's first data write, validated on
+    // every merge
     val nbPath = Paths.get(s"$stateDir/_n_buckets")
-    if (hasState && Files.exists(nbPath)) {
-      val storedN = new String(Files.readAllBytes(nbPath), "UTF-8").trim.toInt
+    val pinned = Files.exists(nbPath)
+    if (pinned) {
+      val body = new String(Files.readAllBytes(nbPath), "UTF-8").trim
+      val storedN = body.toIntOption.getOrElse(throw new IllegalStateException(
+        s"unparseable bucket-count pin $nbPath: '$body'"))
       require(storedN == nBuckets,
         s"state at $stateDir was written with nBuckets=$storedN, got $nBuckets")
     }
@@ -183,6 +187,9 @@ object Inventory {
       if (mergedHeight == 0L) touched
       else touched.filter(bk => bucketHeights.getOrElse(bk, 0L) < mergedHeight)
     if (behind.isEmpty) return false
+    // atomic, and strictly before any data file: a crash can leave a
+    // pin without data, never data without a pin
+    if (!pinned) DeltaPartsStore.writeAtomic(nbPath, nBuckets.toString)
     val bBehind = withBucket
       .filter(col("bucket").isin(behind.map(x => x: Any): _*))
       .drop("bucket")
@@ -221,7 +228,7 @@ object Inventory {
     val merged = combine(priorBehind, bBehind).withColumn("bucket", bucket)
       .withColumn("merged_height", lit(mergedHeight))
     def writeMerged(df: DataFrame): Unit =
-      df.write.mode(SaveMode.Overwrite)
+      Fs.writer(df).mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket", "merged_height")
         .parquet(stateDir)
@@ -250,7 +257,6 @@ object Inventory {
           .map { case (pid, fp) =>
             pid.stripPrefix("bucket=").toInt -> fp }
       }
-    Files.write(nbPath, nBuckets.toString.getBytes("UTF-8"))
     fps.foreach { case (bk, fp) =>
       ArtifactStore.writeFpPart(stateDir, s"bucket=$bk.mh=$mergedHeight", fp)
     }

@@ -46,15 +46,14 @@ object ShardWriter {
       .map(c => c -> col(c))
     val assigned = ShardAssign.tokenBalanced(docs, nShards, payload)
       .localCheckpoint() // feeds the shard write + the manifest agg
-    assigned
-      .repartition(nShards, col("shard_id"))
-      .write.mode("overwrite").partitionBy("shard_id")
+    Fs.writer(assigned.repartition(nShards, col("shard_id")))
+      .mode("overwrite").partitionBy("shard_id")
       .parquet(s"$outDir/shards")
     val manifest = assigned.groupBy("shard_id").agg(
       count(lit(1)).as("n_docs"),
       sum("n_tokens").as("n_tokens"),
       expr("bit_xor(xxhash64(doc_id))").as("checksum"))
-    manifest.coalesce(1).write.mode("overwrite")
+    Fs.writer(manifest.coalesce(1)).mode("overwrite")
       .parquet(s"$outDir/manifest")
     // write-time content identity (the ArtifactStore managed-store
     // protocol, second integrated store after StreamNswInsert): one

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ops.ArtifactStore
+import graft.ops.{ArtifactStore, Fs}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
@@ -87,7 +87,7 @@ object PipelineQueries83 {
         // written payload (with its _SUCCESS) and NO manifest — a
         // build that died before its atomic manifest move
         val tornAddr = addrDir.getParent.resolve("fp_torn")
-        nat.limit(3).write
+        Fs.writer(nat.limit(3))
           .parquet(tornAddr.resolve("payload-torn01").toString)
         VacuumOracle.sql = Some(
           s"""WITH f AS (SELECT substr(file, ${root.length + 2})

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.domain.{AccountLedger, Actors, OuiLedger, Ver}
-import graft.ops.{CommittedParquet, Inventory}
+import graft.ops.{CommittedParquet, Fs, Inventory}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -369,7 +369,7 @@ object BlockIngest {
           .withColumn("slice", lit(newCommitted))
         val fps = graft.ops.ArtifactStore.observedPartFingerprints(
           out, "hb", batchBuckets, df.columns.toSeq) {
-          _.write.mode(SaveMode.Overwrite)
+          Fs.writer(_).mode(SaveMode.Overwrite)
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("hb", "slice")
             .parquet(s"$sinkDir/$table")
@@ -1209,8 +1209,8 @@ object BlockIngest {
     val updated = deltas.map { case (k, d) => k -> (prior.getOrElse(k, 0L) + d) } +
       ("_merged_height" -> newCommitted)
     import spark.implicits._
-    updated.toSeq.toDF("name", "value")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
+    Fs.writer(updated.toSeq.toDF("name", "value").coalesce(1))
+      .mode(SaveMode.Overwrite)
       .parquet(s"$statsDir/h=$newCommitted")
   }
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Fs
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -94,8 +95,9 @@ object StatusRefresh {
           .unionByName(refreshed)
     }
     val tmp = s"$stateDir._tmp"
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-    spark.read.parquet(tmp).write.mode(SaveMode.Overwrite).parquet(stateDir)
+    Fs.writer(merged).mode(SaveMode.Overwrite).parquet(tmp)
+    Fs.writer(spark.read.parquet(tmp)).mode(SaveMode.Overwrite)
+      .parquet(stateDir)
   }
 
   /** The periodic shell: a rate-source stream whose only purpose is the

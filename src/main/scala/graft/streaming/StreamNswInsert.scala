@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.{ArtifactStore, NswIndex, TopK, VectorSearch}
+import graft.ops.{ArtifactStore, Fs, NswIndex, TopK, VectorSearch}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -268,7 +268,7 @@ object StreamNswInsert {
     def commitPart(sub: String, df: DataFrame,
                    cols: Seq[String]): Unit = {
       val dir = s"$storeDir/$sub"
-      df.write.mode("overwrite").parquet(s"$dir/bid=$bid")
+      Fs.writer(df).mode("overwrite").parquet(s"$dir/bid=$bid")
       // fingerprint the rows AS WRITTEN (one batch-sized file scan):
       // the sidecar must reproduce exactly what a reader would hash
       ArtifactStore.writeFpPart(dir, s"bid=$bid",
@@ -379,8 +379,8 @@ object StreamNswInsert {
             .map(Files.size(_)).sum
           val k = math.max(1L,
             (bytes + CompactTargetBytes - 1) / CompactTargetBytes).toInt
-          readCommitted(spark, dir, schema, storeDir)
-            .coalesce(k).write.parquet(s"$tmp/bid=$applied")
+          Fs.writer(readCommitted(spark, dir, schema, storeDir)
+            .coalesce(k)).parquet(s"$tmp/bid=$applied")
           val parts = ArtifactStore
             .readFpParts(dir, committedPart(applied)).map(_._2)
           // the rollup sidecar is NAMED AFTER its data dir (bid=N) so

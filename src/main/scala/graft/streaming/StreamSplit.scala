@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.functions.TextAnalysis._
-import graft.ops.{ConnectedComponents, Dedup}
+import graft.ops.{ConnectedComponents, Dedup, Fs}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -160,8 +160,8 @@ object StreamSplit {
     val tmp = storeDir + ".compact.tmp"
     val old = storeDir + ".compact.old"
     deleteRec(Paths.get(tmp)); deleteRec(Paths.get(old))
-    spark.read.schema(storeSchema).parquet(storeDir)
-      .coalesce(k).write.mode("overwrite").parquet(tmp)
+    Fs.writer(spark.read.schema(storeSchema).parquet(storeDir)
+      .coalesce(k)).mode("overwrite").parquet(tmp)
     Files.move(Paths.get(storeDir), Paths.get(old),
       StandardCopyOption.ATOMIC_MOVE)
     Files.move(Paths.get(tmp), Paths.get(storeDir),
@@ -191,8 +191,8 @@ object StreamSplit {
         val before = spark.sparkContext.getPersistentRDDs.keySet
         val prior = readStore(spark, storeDir).localCheckpoint()
         try {
-          assignBatch(batch, prior, threshold)
-            .write.mode("append").parquet(storeDir)
+          Fs.writer(assignBatch(batch, prior, threshold))
+            .mode("append").parquet(storeDir)
           // retention: every append fragments the store (replays
           // append zero rows but still write files) — compact once
           // fragmentation passes the trigger, OUTSIDE the append so a
