@@ -34,7 +34,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *    not itself cost a corpus scan (r13 verdict #1).
   *  - '''commit discipline''' is [[graft.streaming.BlockIngest]]'s:
   *    the parquet payload is written first, `manifest.json` is written
-  *    via temp-file + ATOMIC_MOVE strictly LAST, and readers require
+  *    through [[Fs.writeAtomic]] strictly LAST, and readers require
   *    the manifest — a torn build (crash mid-write) is invisible and
   *    rebuilds idempotently.
   *  - '''retention''': committing a new fingerprint vacuums the
@@ -307,7 +307,7 @@ object ArtifactStore {
                   fp: (BigInt, Long)): Unit = {
     require(SafePartId.matches(part),
       s"unsafe sidecar part id '$part' — allowed: [A-Za-z0-9=_.-]+")
-    DeltaPartsStore.writeAtomic(Paths.get(s"$storeDir/_fp/$part.json"),
+    Fs.writeAtomic(Paths.get(s"$storeDir/_fp/$part.json"),
       s"""{"part":"$part","sum":"${fp._1}","n":${fp._2}}""")
   }
 
@@ -724,10 +724,7 @@ object ArtifactStore {
     }
     val body =
       s"""{"name":"${esc(name)}","fingerprint":"${esc(fp)}","params":"${esc(params)}","payload":"$payload"}"""
-    val tmp = Paths.get(s"$dir/manifest.json.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(s"$dir/manifest.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Fs.writeAtomic(Paths.get(s"$dir/manifest.json"), body)
   }
 
   /** Drop payload dirs of THIS address that the fresh manifest does not

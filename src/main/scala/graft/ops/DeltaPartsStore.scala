@@ -6,17 +6,25 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 /** The maintained DELTA-PARTS store protocol, one implementation
-  * behind all seven maintained stores (token counts and the winnow,
-  * LSH, MinHash, SimHash, IVF and containment indexes): one `bid=N`
-  * parquet partition plus an `_fp` content sidecar per applied
-  * micro-batch, a meta-file watermark written strictly LAST (torn
-  * later batches are invisible — the BlockIngest reader rule), a
-  * sidecar-folded store fingerprint (O(#batches) metadata reads, never
-  * a data scan), and a two-atomic-rename compaction with crash
-  * recovery.
+  * behind every maintained store (token counts; the winnow, LSH,
+  * MinHash, SimHash, IVF and containment indexes; the four sub-stores
+  * of the maintained NSW graph): one `bid=N` parquet partition plus an
+  * `_fp` content sidecar per applied micro-batch, a meta-file
+  * watermark written strictly LAST (torn later batches are invisible —
+  * the BlockIngest reader rule), a sidecar-folded store fingerprint
+  * (O(#batches) metadata reads, never a data scan), and a
+  * two-atomic-rename compaction with crash recovery.
+  *
+  * The protocol has two halves: a [[DeltaPartsStore.PartSet]] (one
+  * directory of `bid=N` parts, their sidecars and its compaction) read
+  * at a [[DeltaPartsStore.Watermark]] (`meta.txt`, the commit point).
+  * This class is the common case — one part set `<storeDir>/parts`
+  * under one watermark; a store with several row kinds (the NSW graph:
+  * vectors and three edge layers) keeps one part set per kind under
+  * ONE watermark, so a batch commits all of them or none.
   *
   * Row semantics stay with the caller:
   *
@@ -46,207 +54,226 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 final class DeltaPartsStore(
     storeDir: String,
     schema: StructType,
-    compactRewrite: DataFrame => DataFrame) {
-
-  private val cols = schema.fieldNames.toIndexedSeq
-
-  private def metaPath = Paths.get(s"$storeDir/meta.txt")
+    compactRewrite: DataFrame => DataFrame)
+  extends DeltaPartsStore.PartSet(s"$storeDir/parts", schema,
+    new DeltaPartsStore.Watermark(storeDir), compactRewrite) {
 
   /** Applied-through batch id (-1 = empty store). */
-  def appliedBid: Long =
-    if (Files.exists(metaPath))
-      new String(Files.readAllBytes(metaPath),
-        StandardCharsets.UTF_8).trim.toLong
-    else -1L
+  def appliedBid: Long = watermark.applied
 
-  /** The parts root — exposed so callers can address downstream
-    * part-artifacts by this store's sidecars
-    * ([[graft.ops.ArtifactStore.readFpParts]]). */
-  def partsDir: String = s"$storeDir/parts"
-
-  /** The companion's parse-and-refuse rule, bound to this store's
-    * parts dir (see [[DeltaPartsStore.bidOf]]). */
-  private def bidOf(name: String): Option[Long] =
-    DeltaPartsStore.bidOf(name, partsDir)
-
-  /** Is `part` a committed `bid=N` partition at watermark `applied`?
-    * Callers capture the watermark ONCE per operation and pass the
-    * resulting predicate to `readFpParts` — re-reading meta.txt per
-    * sidecar would cost one small-file round-trip per part. A torn
-    * later batch's sidecar never passes. */
-  def committedPartAt(applied: Long)(part: String): Boolean =
-    bidOf(part).exists(_ <= applied)
-
-  /** The read schema: data columns + the `bid` partition column —
-    * specified EXPLICITLY on every store read so an all-empty store
-    * (every committed batch filtered to zero rows) still reads instead
-    * of failing parquet schema inference. */
-  private val readSchema = StructType(
-    schema.fields :+ org.apache.spark.sql.types.StructField(
-      "bid", org.apache.spark.sql.types.LongType))
-
-  /** Committed part rows: partitions at or below the meta watermark. */
-  def parts(spark: SparkSession): DataFrame = {
-    recoverCompaction()
-    val applied = appliedBid
-    if (applied < 0 || !Files.exists(Paths.get(partsDir)))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], schema)
-    spark.read.option("basePath", partsDir).schema(readSchema)
-      .parquet(partsDir)
-      .where(col("bid") <= applied)
-      .select(cols.map(col): _*)
-  }
-
-  /** One committed part's rows (data columns only) — the
-    * part-artifact buildPart reader, schema-explicit so an empty part
-    * reads as zero rows instead of failing inference. */
-  def readPart(spark: SparkSession, pid: String): DataFrame =
-    spark.read.option("basePath", partsDir).schema(readSchema)
-      .parquet(s"$partsDir/$pid")
-      .select(cols.map(col): _*)
-
-  /** Serve the maintained store through the artifact store,
-    * PART-ADDRESSED by the write-time sidecars: each committed `bid=N`
-    * partition is its own artifact part, so an append copies one
-    * batch's rows, a re-serve is a pure multi-path scan, and
-    * compaction collapses the part set to one rollup (the departed
-    * batch parts vacuum on that committing serve). With no artifact
-    * root — or an empty store — the folded [[parts]] view directly.
-    * One implementation behind every maintained store's serve leg
-    * ([[PinnedStore.served]]). */
-  def serveParts(spark: SparkSession, artifactName: String,
-                 params: String): DataFrame = {
-    if (ArtifactStore.root(spark).isEmpty) parts(spark)
-    else {
-      recoverCompaction()
-      val sidecars = ArtifactStore
-        .readFpParts(partsDir, committedPartAt(appliedBid))
-        .map { case (pid, fp) =>
-          pid -> ArtifactStore.combineParts(Seq(fp)) }
-      if (sidecars.isEmpty) parts(spark)
-      else ArtifactStore.buildOrServeParts(spark, artifactName,
-        sidecars, params, sourceKey = partsDir)(readPart(spark, _))
+  /** Commit one batch's pre-transformed part rows: the `bid=N`
+    * partition and its sidecar ([[writePart]]), then the watermark
+    * strictly last. A bid at or below the watermark is a replayed
+    * batch: no-op. */
+  def applyPart(part: DataFrame, bid: Long): Unit =
+    if (bid > appliedBid) {
+      writePart(part, bid)
+      watermark.commit(bid) // commit point, strictly last
     }
-  }
-
-  /** Content fingerprint of the committed part rows from the
-    * write-time sidecars — O(#batches) metadata, no scan; equal to a
-    * full-scan fingerprint of [[parts]] (spec-pinned by every store).
-    */
-  def storeFingerprint: String =
-    ArtifactStore.fingerprintFromParts(partsDir, committedPartAt(appliedBid))
-
-  /** Commit one batch's pre-transformed part rows: write the `bid=N`
-    * partition (overwrite mode — a replayed batch overwrites ITSELF,
-    * idempotence with no anti-join against the standing store), record
-    * the `_fp` sidecar from the rows AS WRITTEN, then move the
-    * watermark strictly last. A bid at or below the watermark is a
-    * replayed batch: no-op. */
-  def applyPart(part: DataFrame, bid: Long): Unit = {
-    // restore a torn compaction FIRST: writing the new partition would
-    // recreate partsDir and strand `.compact.old` (the whole committed
-    // store) where recovery can no longer see it — silent data loss on
-    // the next compaction's deleteRec
-    recoverCompaction()
-    if (bid <= appliedBid) return
-    // sidecar from the rows AS WRITTEN: an observe metric on the write
-    // job itself hashes exactly the written evaluation (an all-filtered
-    // batch writes an EMPTY part, which fingerprints to (0, 0)) — one
-    // job per batch commit instead of write + part re-read
-    ArtifactStore.writeFpPart(partsDir, s"bid=$bid",
-      ArtifactStore.writeWithFingerprint(
-        part.select(cols.map(col): _*), s"$partsDir/bid=$bid"))
-    // commit point, strictly last
-    DeltaPartsStore.writeAtomic(metaPath, bid.toString)
-  }
-
-  /** Rewrite every committed part into ONE `bid=<applied>` partition
-    * behind the two-atomic-rename discipline (crash at any point
-    * leaves the fragmented or the rewritten store, never a mixture).
-    * The partition's FILE count honors `targetBytes` — one output file
-    * per that many committed input bytes (the q322/StreamNswInsert
-    * quota grouping): a 100 TB maintained store compacts into bounded
-    * files, never one giant rollup, never one file per historical
-    * batch either. What the rewrite means for rows — and so for the
-    * fingerprint — is `compactRewrite`'s contract (see the class doc).
-    * Returns true if the store was rewritten. */
-  def compact(spark: SparkSession, minDirs: Int = 2,
-              targetBytes: Long = DeltaPartsStore.CompactTargetBytes)
-      : Boolean = {
-    val applied = appliedBid
-    if (applied < 0) return false
-    recoverCompaction()
-    val d = Paths.get(partsDir)
-    if (!Files.isDirectory(d)) return false
-    val committed = Fs.ls(d).filter { p =>
-      Files.isDirectory(p) &&
-        bidOf(p.getFileName.toString).exists(_ <= applied)
-    }
-    if (committed.size < minDirs) return false
-    val tmp = s"$partsDir.compact.tmp"
-    val old = s"$partsDir.compact.old"
-    Fs.deleteRec(Paths.get(tmp)); Fs.deleteRec(Paths.get(old))
-    val bytes = committed.flatMap(Fs.ls)
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map(Files.size(_)).sum
-    val k = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    // fingerprint the rewritten rows as written (never fold the old
-    // sidecars: a MERGING rewrite changed the rows they hashed) — the
-    // observe metric rides the rewrite job, same basis as a read-back
-    ArtifactStore.writeFpPart(tmp, s"bid=$applied",
-      ArtifactStore.writeWithFingerprint(
-        compactRewrite(parts(spark)).select(cols.map(col): _*)
-          .coalesce(k), s"$tmp/bid=$applied"))
-    Files.move(Paths.get(partsDir), Paths.get(old),
-      StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), Paths.get(partsDir),
-      StandardCopyOption.ATOMIC_MOVE)
-    Fs.deleteRec(Paths.get(old))
-    true
-  }
-
-  /** Count of committed `bid=N` part directories (the auto-compaction
-    * trigger input). */
-  def partDirCount: Int = {
-    val d = Paths.get(partsDir)
-    if (!Files.isDirectory(d)) 0
-    else Fs.ls(d).count(p => bidOf(p.getFileName.toString).isDefined)
-  }
-
-  /** Crash recovery: a compaction that died between its two renames
-    * leaves the store at `<parts>.compact.old` — restore it; one that
-    * died AFTER the second rename but before its cleanup leaves the
-    * swap complete with a stale `.compact.old` copy — by the recovery
-    * ordering invariant (recovery runs before any new write, so
-    * partsDir can only coexist with `.old` after a completed swap)
-    * that copy is superseded: reclaim it here rather than stranding a
-    * full pre-compaction store until a `minDirs`-gated compaction that
-    * may never trigger. A leftover `.tmp` is garbage either way. */
-  def recoverCompaction(): Unit = {
-    val d = Paths.get(partsDir)
-    val old = Paths.get(partsDir + ".compact.old")
-    if (!Files.exists(d) && Files.exists(old))
-      Files.move(old, d, StandardCopyOption.ATOMIC_MOVE)
-    else if (Files.exists(d) && Files.exists(old))
-      Fs.deleteRec(old)
-    Fs.deleteRec(Paths.get(partsDir + ".compact.tmp"))
-  }
 }
 
 object DeltaPartsStore {
+  /** A store's commit point: `<storeDir>/meta.txt` holds the
+    * applied-through batch id, published with [[Fs.writeAtomic]]
+    * strictly after every part the batch wrote. */
+  final class Watermark(storeDir: String) {
+    private val path = Paths.get(s"$storeDir/meta.txt")
+
+    /** Applied-through batch id (-1 = empty store). */
+    def applied: Long =
+      if (Files.exists(path))
+        new String(Files.readAllBytes(path), StandardCharsets.UTF_8).trim.toLong
+      else -1L
+
+    def commit(bid: Long): Unit = Fs.writeAtomic(path, bid.toString)
+  }
+
+  /** One directory of `bid=N` parquet parts with their `_fp` content
+    * sidecars, read at `watermark`: what is committed, how it folds,
+    * serves and compacts. Writing a part never moves the watermark —
+    * the store commits once per batch, after all its part sets. */
+  class PartSet(val partsDir: String, schema: StructType,
+                protected val watermark: Watermark,
+                compactRewrite: DataFrame => DataFrame = identity) {
+
+    private val cols = schema.fieldNames.toIndexedSeq
+
+    /** The companion's parse-and-refuse rule, bound to this part set's
+      * dir (see [[DeltaPartsStore.bidOf]]). */
+    private def bidOf(name: String): Option[Long] =
+      DeltaPartsStore.bidOf(name, partsDir)
+
+    /** Is `part` a committed `bid=N` partition at watermark `applied`?
+      * Callers capture the watermark ONCE per operation and pass the
+      * resulting predicate to `readFpParts` — re-reading meta.txt per
+      * sidecar would cost one small-file round-trip per part. A torn
+      * later batch's sidecar never passes. */
+    def committedPartAt(applied: Long)(part: String): Boolean =
+      bidOf(part).exists(_ <= applied)
+
+    /** Committed `bid=N` part directories at watermark `applied`. */
+    private def committedDirs(applied: Long): Seq[Path] = {
+      val d = Paths.get(partsDir)
+      if (applied < 0 || !Files.isDirectory(d)) Seq.empty
+      else Fs.ls(d).filter(p => Files.isDirectory(p) &&
+        committedPartAt(applied)(p.getFileName.toString))
+    }
+
+    /** The data columns of the parts in `dirs`, over the files a driver
+      * listing names ([[CommittedParquet]]): no listing job — Spark
+      * lists more than 32 `bid=` dirs with one — and no schema job. An
+      * all-empty part set still reads: every part, even an empty one,
+      * is a Spark-written file carrying the row schema. */
+    private def readDirs(spark: SparkSession, dirs: Seq[Path]): DataFrame = {
+      val files = dirs.flatMap(CommittedParquet.dataFiles)
+      if (files.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+      else CommittedParquet.read(spark, files).select(cols.map(col): _*)
+    }
+
+    /** Committed part rows: partitions at or below the watermark. */
+    def parts(spark: SparkSession): DataFrame = {
+      recoverCompaction()
+      readDirs(spark, committedDirs(watermark.applied))
+    }
+
+    /** One committed part's rows (data columns only) — the
+      * part-artifact buildPart reader. */
+    def readPart(spark: SparkSession, pid: String): DataFrame =
+      readDirs(spark, Seq(Paths.get(s"$partsDir/$pid")))
+
+    /** Serve the part set through the artifact store, PART-ADDRESSED by
+      * the write-time sidecars: each committed `bid=N` partition is its
+      * own artifact part, so an append copies one batch's rows, a
+      * re-serve is a pure multi-path scan, and compaction collapses the
+      * part set to one rollup (the departed batch parts vacuum on that
+      * committing serve). With no artifact root — or an empty store —
+      * the folded [[parts]] view directly. One implementation behind
+      * every maintained store's serve leg ([[PinnedStore.served]],
+      * the maintained NSW graph). */
+    def serveParts(spark: SparkSession, artifactName: String,
+                   params: String): DataFrame = {
+      if (ArtifactStore.root(spark).isEmpty) parts(spark)
+      else {
+        recoverCompaction()
+        val sidecars = ArtifactStore
+          .readFpParts(partsDir, committedPartAt(watermark.applied))
+          .map { case (pid, fp) =>
+            pid -> ArtifactStore.combineParts(Seq(fp)) }
+        if (sidecars.isEmpty) parts(spark)
+        else ArtifactStore.buildOrServeParts(spark, artifactName,
+          sidecars, params, sourceKey = partsDir)(readPart(spark, _))
+      }
+    }
+
+    /** Content fingerprint of the committed part rows from the
+      * write-time sidecars — O(#batches) metadata, no scan; equal to a
+      * full-scan fingerprint of [[parts]] (spec-pinned by every store).
+      */
+    def storeFingerprint: String =
+      ArtifactStore.fingerprintFromParts(partsDir,
+        committedPartAt(watermark.applied))
+
+    /** Write one batch's `bid=N` partition (overwrite mode — a replayed
+      * batch overwrites ITSELF, idempotence with no anti-join against
+      * the standing store) and its `_fp` sidecar from the rows AS
+      * WRITTEN. Not a commit: the caller moves the watermark after its
+      * last part set. */
+    def writePart(part: DataFrame, bid: Long): Unit = {
+      // restore a torn compaction FIRST: writing the new partition would
+      // recreate partsDir and strand `.compact.old` (the whole committed
+      // store) where recovery can no longer see it — silent data loss on
+      // the next compaction's reclaim
+      recoverCompaction()
+      // an observe metric on the write job itself hashes exactly the
+      // written evaluation (an all-filtered batch writes an EMPTY part,
+      // which fingerprints to (0, 0)) — one job per part instead of
+      // write + part re-read
+      ArtifactStore.writeFpPart(partsDir, s"bid=$bid",
+        ArtifactStore.writeWithFingerprint(
+          part.select(cols.map(col): _*), s"$partsDir/bid=$bid"))
+    }
+
+    /** Rewrite every committed part into ONE `bid=<applied>` partition
+      * behind the compaction swap ([[rewriteSwapped]]: a crash at any
+      * point leaves the fragmented or the rewritten part set, never a
+      * mixture). The partition's FILE count honors `targetBytes` — one
+      * output file per that many committed input bytes (the q322
+      * quota grouping): a 100 TB maintained store compacts into
+      * bounded files, never one giant rollup, never one file per
+      * historical batch either. What the rewrite means for rows — and
+      * so for the fingerprint — is `compactRewrite`'s contract (see
+      * [[DeltaPartsStore]]). Returns true if the part set was
+      * rewritten. */
+    def compact(spark: SparkSession, minDirs: Int = 2,
+                targetBytes: Long = CompactTargetBytes): Boolean = {
+      val applied = watermark.applied
+      recoverCompaction()
+      val committed = committedDirs(applied)
+      if (committed.isEmpty || committed.size < minDirs) return false
+      val bytes = committed.flatMap(Fs.ls)
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(Files.size(_)).sum
+      val k = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+      // fingerprint the rewritten rows as written (never fold the old
+      // sidecars: a MERGING rewrite changed the rows they hashed) — the
+      // observe metric rides the rewrite job, same basis as a read-back
+      rewriteSwapped(partsDir) { tmp =>
+        ArtifactStore.writeFpPart(tmp, s"bid=$applied",
+          ArtifactStore.writeWithFingerprint(
+            compactRewrite(parts(spark)).select(cols.map(col): _*)
+              .coalesce(k), s"$tmp/bid=$applied"))
+      }
+      true
+    }
+
+    /** Count of `bid=N` part directories (the auto-compaction trigger
+      * input). */
+    def partDirCount: Int = {
+      val d = Paths.get(partsDir)
+      if (!Files.isDirectory(d)) 0
+      else Fs.ls(d).count(p => bidOf(p.getFileName.toString).isDefined)
+    }
+
+    /** Crash recovery of this part set's compaction
+      * ([[DeltaPartsStore.recoverCompaction]]). */
+    def recoverCompaction(): Unit = DeltaPartsStore.recoverCompaction(partsDir)
+  }
+
   /** Compaction rewrite quota: one output file per this many committed
-    * input bytes (the q322/StreamNswInsert grouping constant). */
+    * input bytes (the q322 grouping constant). */
   val CompactTargetBytes: Long = 128L * 1024 * 1024
 
-  /** Write `text` to `p` through `<p>.tmp` and one atomic rename — a
-    * crash never leaves a torn `p`; a leftover `.tmp` is not `p`. */
-  def writeAtomic(p: Path, text: String): Unit = {
-    Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(s"${p.getFileName}.tmp")
-    Files.write(tmp, text.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+  private def staged(dir: String) = Paths.get(s"$dir.compact.tmp")
+  private def superseded(dir: String) = Paths.get(s"$dir.compact.old")
+
+  /** Rewrite directory `dir` as a whole: `write` fills the staging dir
+    * `<dir>.compact.tmp` (whose path it is given), [[Fs.swap]] puts it
+    * in place of `dir` — the old `dir` parks at `<dir>.compact.old`
+    * between the two renames — and the superseded copy is reclaimed.
+    * The one compaction swap of every store that rewrites a whole
+    * directory (the part sets, the flat StreamSplit store). Call after
+    * [[recoverCompaction]], which clears both side names. */
+  def rewriteSwapped(dir: String)(write: String => Unit): Unit = {
+    write(staged(dir).toString)
+    Fs.swap(Paths.get(dir), staged(dir), superseded(dir))
+    Fs.deleteRec(superseded(dir))
+  }
+
+  /** Crash recovery of a [[rewriteSwapped]] directory, run before any
+    * read or write of it: a compaction that died between its two
+    * renames leaves the store at `<dir>.compact.old` — restore it; one
+    * that died AFTER the second rename but before its cleanup leaves
+    * the swap complete with a stale `.compact.old` copy — by the
+    * recovery ordering invariant (recovery runs before any new write,
+    * so `dir` can only coexist with `.old` after a completed swap) that
+    * copy is superseded: reclaim it here rather than stranding a full
+    * pre-compaction store until the next compaction, which may never
+    * trigger. A leftover `.tmp` is garbage either way. */
+  def recoverCompaction(dir: String): Unit = {
+    if (!Fs.restoreSwap(Paths.get(dir), superseded(dir)))
+      Fs.deleteRec(superseded(dir))
+    Fs.deleteRec(staged(dir))
   }
 
   /** A store's IDENTITY PIN: the parameters its rows were derived
@@ -278,7 +305,7 @@ object DeltaPartsStore {
     }
 
     def write(storeDir: String, g: G): Unit =
-      writeAtomic(path(storeDir), encode(g))
+      Fs.writeAtomic(path(storeDir), encode(g))
   }
 
   object Pin {

@@ -189,7 +189,7 @@ object Inventory {
     if (behind.isEmpty) return false
     // atomic, and strictly before any data file: a crash can leave a
     // pin without data, never data without a pin
-    if (!pinned) DeltaPartsStore.writeAtomic(nbPath, nBuckets.toString)
+    if (!pinned) Fs.writeAtomic(nbPath, nBuckets.toString)
     val bBehind = withBucket
       .filter(col("bucket").isin(behind.map(x => x: Any): _*))
       .drop("bucket")

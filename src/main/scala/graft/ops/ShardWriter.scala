@@ -55,8 +55,8 @@ object ShardWriter {
       expr("bit_xor(xxhash64(doc_id))").as("checksum"))
     Fs.writer(manifest.coalesce(1)).mode("overwrite")
       .parquet(s"$outDir/manifest")
-    // write-time content identity (the ArtifactStore managed-store
-    // protocol, second integrated store after StreamNswInsert): one
+    // write-time content identity (the ArtifactStore sidecar
+    // protocol the maintained stores' DeltaPartsStore uses): one
     // grouped scan of the rows AS WRITTEN records each shard's
     // (Σ row-hash, count) sidecar, so an artifact built over this
     // shard store fingerprints its staleness in O(#shards) metadata

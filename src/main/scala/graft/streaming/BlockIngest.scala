@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 
 /** Ordered block-ingest driver v1 — the Spark shape of the reference's
   * follower (ref: src/be_db_follower.erl:86-108; height continuity
@@ -140,13 +140,8 @@ object BlockIngest {
       case None =>
         val k = requested.getOrElse(DefaultBucketBlocks)
         require(k > 0, s"bucket width must be positive, got $k")
-        Files.createDirectories(Paths.get(sinkDir))
-        val tmp = Paths.get(s"$sinkDir/._layout.json.tmp")
-        Files.write(tmp,
-          s"""{"fact_bucket_blocks":$k}""".getBytes("UTF-8"))
-        Files.move(tmp, layoutPath(sinkDir),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        Fs.writeAtomic(layoutPath(sinkDir),
+          s"""{"fact_bucket_blocks":$k}""")
         k
     }
 
@@ -1076,10 +1071,7 @@ object BlockIngest {
           slices.foreach(s => Files.deleteIfExists(
             Paths.get(s"$dir/_fp/hb=$b.slice=$s.json")))
           // 3. the two renames
-          Files.move(Paths.get(s"$dir/hb=$b"), old,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          Files.move(Paths.get(tmp), Paths.get(s"$dir/hb=$b"),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+          Fs.swap(Paths.get(s"$dir/hb=$b"), Paths.get(tmp), old)
           // 4. folded sidecar from the rewritten rows (the observe
           // metric captured at write time in step 1)
           graft.ops.ArtifactStore.writeFpPart(dir, s"hb=$b.slice=$smax",
@@ -1115,10 +1107,7 @@ object BlockIngest {
           graft.ops.Fs.deleteRec(p)
         else if (n.startsWith(".compact-old-hb=")) {
           debris = true
-          val target = root.resolve(n.stripPrefix(".compact-old-"))
-          if (!Files.exists(target))
-            Files.move(p, target,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+          Fs.restoreSwap(root.resolve(n.stripPrefix(".compact-old-")), p)
         }
       }
     }
@@ -1160,16 +1149,9 @@ object BlockIngest {
   private def writeSnapshotManifest(sinkDir: String,
                                     snapRows: Seq[(Long, String)]): Unit = {
     snapRows.sortBy(-_._1).headOption.foreach { case (h, sh) =>
-      val json = s"""{"height": $h, "snapshot_hash": "$sh"}"""
-      Files.createDirectories(Paths.get(sinkDir))
       // atomic replace: a reader never sees a half-written manifest
-      val tmp = Paths.get(s"$sinkDir/.latest-snap.json.tmp")
-      Files.write(tmp, json.getBytes("UTF-8"),
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-        StandardOpenOption.WRITE)
-      Files.move(tmp, Paths.get(s"$sinkDir/latest-snap.json"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Fs.writeAtomic(Paths.get(s"$sinkDir/latest-snap.json"),
+        s"""{"height": $h, "snapshot_hash": "$sh"}""")
     }
   }
 
@@ -1281,9 +1263,9 @@ object BlockIngest {
     (facts ++ invs :+ stats).toMap
   }
 
-  /** Write `_commits/<height>.json` — the atomic commit point: built in
-    * a temp file, published with one ATOMIC_MOVE rename. Lists every
-    * table's live files at this height.
+  /** Write `_commits/<height>.json` — the atomic commit point,
+    * published with [[Fs.writeAtomic]]. Lists every table's live files
+    * at this height.
     */
   private def writeCommitManifest(sinkDir: String, height: Long): Unit = {
     val tables = liveFiles(sinkDir, height)
@@ -1293,17 +1275,9 @@ object BlockIngest {
       fs.sorted.map(f => "\"" + esc(f) + "\"")
         .mkString("\"" + esc(t) + "\": [", ", ", "]")
     }.mkString(s"""{"height": $height, "tables": {""", ", ", "}}")
-    val commitsDir = Paths.get(s"$sinkDir/_commits")
-    Files.createDirectories(commitsDir)
-    val tmp = commitsDir.resolve(s".tmp-$height.json")
-    Files.write(tmp, body.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-      StandardOpenOption.WRITE)
-    // REPLACE: [[compactFacts]] rewrites the newest manifest in place
-    // after a bucket fold (same height, new file list)
-    Files.move(tmp, commitsDir.resolve(s"$height.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    // may replace: [[compactFacts]] rewrites the newest manifest in
+    // place after a bucket fold (same height, new file list)
+    Fs.writeAtomic(Paths.get(s"$sinkDir/_commits/$height.json"), body)
   }
 
   private val manifestJson = new com.fasterxml.jackson.databind.ObjectMapper()

@@ -1,12 +1,12 @@
 package graft.streaming
 
+import graft.ops.Fs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** Streaming twin of q348's exponentially-decayed counters: per
   * (event_type, day) counts accumulate across micro-batches and the
@@ -45,14 +45,11 @@ object StreamDecayedCounts {
 
   private def writeStore(path: String, applied: Long,
                          m: Map[(String, Long), Long]): Unit = {
-    val tmp = Paths.get(path + ".tmp")
     val body = (applied.toString +:
       m.toSeq.sortBy(t => (t._1._1, t._1._2)).map { case ((t, d), c) =>
         s"$t,$d,$c"
       }).mkString("\n")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Fs.writeAtomic(Paths.get(path), body)
   }
 
   /** Decayed milli counters per type against the latest stored day. */

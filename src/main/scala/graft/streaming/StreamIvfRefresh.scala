@@ -1,12 +1,12 @@
 package graft.streaming
 
-import graft.ops.VectorSearch
+import graft.ops.{Fs, VectorSearch}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** Incremental IVF centroid refresh under distribution drift — the
   * maintenance loop StreamAnnIngest needs at 100 TB: centroids trained
@@ -99,7 +99,6 @@ object StreamIvfRefresh {
   }
 
   private def writeStore(path: String, st: State): Unit = {
-    val tmp = Paths.get(path + ".tmp")
     val body = Seq(
       s"${st.applied};${st.refreshes}",
       st.centroids.map(_.map(java.lang.Double.toString).mkString(","))
@@ -110,9 +109,7 @@ object StreamIvfRefresh {
         s"$h,$id," + v.map(java.lang.Double.toString).mkString(",")
       }.mkString("|")
     ).mkString("\n")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Fs.writeAtomic(Paths.get(path), body)
   }
 
   /** Install freshly trained centroids and their reference occupancy

@@ -1,12 +1,12 @@
 package graft.streaming
 
 import graft.functions.TextAnalysis._
+import graft.ops.Fs
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** Streaming twin of q324's Merkle reconciliation levels: the
   * per-shard xor signatures are maintained incrementally as documents
@@ -41,14 +41,9 @@ object StreamMerkle {
   }
 
   private def writeStore(path: String, applied: Long,
-                         sigs: Array[Long], ns: Array[Long]): Unit = {
-    val tmp = Paths.get(path + ".tmp")
-    Files.write(tmp,
-      s"$applied;${sigs.mkString(",")};${ns.mkString(",")}"
-        .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+                         sigs: Array[Long], ns: Array[Long]): Unit =
+    Fs.writeAtomic(Paths.get(path),
+      s"$applied;${sigs.mkString(",")};${ns.mkString(",")}")
 
   /** q324's row hashing, shared verbatim: shard and content hash. */
   private[graft] def shardSig(batch: DataFrame, nShards: Int): Array[Row] =

@@ -1,12 +1,11 @@
 package graft.streaming
 
-import graft.ops.Moments
+import graft.ops.{Fs, Moments}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** Streaming twin of the q277/q278 moment layer: the second-moment
   * vector is maintained continuously across micro-batches.
@@ -50,13 +49,8 @@ object StreamMoments {
   }
 
   private def writeStore(path: String, applied: Long,
-                         m: Array[Long]): Unit = {
-    val tmp = Paths.get(path + ".tmp")
-    Files.write(tmp, s"$applied;${m.mkString(",")}"
-      .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+                         m: Array[Long]): Unit =
+    Fs.writeAtomic(Paths.get(path), s"$applied;${m.mkString(",")}")
 
   /** Apply one batch if (and only if) its id is new. Exposed for the
     * spec's with/without-gate experiment. */

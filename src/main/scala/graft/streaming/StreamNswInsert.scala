@@ -1,14 +1,12 @@
 package graft.streaming
 
-import graft.ops.{ArtifactStore, Fs, NswIndex, TopK, VectorSearch}
+import graft.ops.{NswIndex, TopK, VectorSearch}
+import graft.ops.DeltaPartsStore.{PartSet, Watermark}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType,
   StructField, StructType}
-
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Streaming NSW/HNSW graph maintenance — the MAINTAIN leg of the
   * artifact lifecycle (build: [[graft.ops.NswIndex.knnGraph]] / serve:
@@ -34,27 +32,23 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *    layer-1 graph (`edges1/`), preserving q362's coarse-entry
   *    ladder as n grows — [[searchLadder]] descends exactly like the
   *    static two-layer build;
-  *  - the batch's vectors and edges land in PER-BATCH partitions
-  *    (`vecs/bid=N/`, `edges/bid=N/`, `edges1/bid=N/`, overwrite
-  *    mode), so a replayed or crash-resumed batch OVERWRITES ITSELF —
-  *    idempotence by construction, no anti-join against the
-  *    corpus-sized edge store; the commit point is the meta file,
-  *    written last via atomic move;
-  *  - each committed partition also records its content identity
-  *    ([[graft.ops.ArtifactStore.writeFpPart]] INSIDE the sub-store,
-  *    `<sub>/_fp/bid=N.json` — underscore-prefixed, invisible to the
-  *    parquet reader): [[serveGraph]] folds them in O(#batches)
-  *    metadata reads to address the served artifact, so the 100 TB
-  *    staleness check never re-scans the store (r13 verdict #1);
+  *  - storage is the maintained-store protocol
+  *    ([[graft.ops.DeltaPartsStore]]): four part sets — `vecs/`,
+  *    `edges/`, `edges1/`, `edges2/` — under ONE `meta.txt` watermark.
+  *    Each batch writes a `bid=N` partition (overwrite mode) plus its
+  *    `_fp` content sidecar into every part set, then moves the
+  *    watermark strictly last, so a replayed or crash-resumed batch
+  *    OVERWRITES ITSELF — idempotence by construction, no anti-join
+  *    against the corpus-sized edge store;
+  *  - [[serveGraph]] folds the sidecars in O(#batches) metadata reads
+  *    to address the served artifact, so the 100 TB staleness check
+  *    never re-scans the store (r13 verdict #1);
   *  - [[compact]] bounds the one-dir-per-batch growth (r13 verdict
-  *    #4a): committed partitions rewrite into a single partition via
-  *    the StreamSplit two-atomic-rename discipline, and because the
-  *    sidecars live inside the renamed dir, data and fingerprint
-  *    metadata swap ATOMICALLY together — a crash at any point leaves
-  *    either the fragmented store or the compacted one, never a
-  *    mixture, and compaction moves bytes, never rows, so the folded
-  *    fingerprint (and therefore the served artifact address) is
-  *    UNCHANGED across it.
+  *    #4a): each part set's committed partitions rewrite into one
+  *    partition behind the compaction swap, sidecars inside the
+  *    swapped dir, and compaction moves bytes, never rows, so the
+  *    folded fingerprint (and therefore the served artifact address)
+  *    is UNCHANGED across it.
   *
   * Honest caveat (inherent to every incremental graph index, HNSW
   * included): the result depends on ARRIVAL ORDER — early nodes were
@@ -68,46 +62,32 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   */
 object StreamNswInsert {
 
-  /** Compaction rewrite quota: one output file per this many input
-    * bytes (the StreamSplit/q322 grouping). */
-  val CompactTargetBytes: Long = 128L * 1024 * 1024
-
   val vecSchema: StructType = StructType(Seq(
     StructField("id", LongType),
     StructField("v", ArrayType(DoubleType))))
   val edgeSchema: StructType = StructType(Seq(
     StructField("src", LongType), StructField("dst", LongType)))
 
-  private def meta(dir: String) = Paths.get(s"$dir/meta.txt")
+  /** One of the four part sets under the store's watermark. */
+  private def partSet(storeDir: String, sub: String): PartSet =
+    new PartSet(s"$storeDir/$sub",
+      if (sub == "vecs") vecSchema else edgeSchema, new Watermark(storeDir))
 
-  /** Applied-through batch id (-1 = empty store). */
-  def appliedBid(storeDir: String): Long =
-    if (Files.exists(meta(storeDir)))
-      new String(Files.readAllBytes(meta(storeDir)),
-        StandardCharsets.UTF_8).trim.toLong
-    else -1L
-
-  private def writeMeta(storeDir: String, bid: Long): Unit = {
-    Files.createDirectories(Paths.get(storeDir))
-    val tmp = Paths.get(s"$storeDir/meta.txt.tmp")
-    Files.write(tmp, bid.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, meta(storeDir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private val subs = Seq("vecs", "edges", "edges1", "edges2")
 
   /** Committed node/edge views: only partitions at or below the meta
     * watermark — a torn later batch is invisible (the BlockIngest
     * reader rule). */
   def nodes(spark: SparkSession, storeDir: String): DataFrame =
-    readCommitted(spark, s"$storeDir/vecs", vecSchema, storeDir)
+    partSet(storeDir, "vecs").parts(spark)
 
   def edges(spark: SparkSession, storeDir: String): DataFrame =
-    readCommitted(spark, s"$storeDir/edges", edgeSchema, storeDir)
+    partSet(storeDir, "edges").parts(spark)
 
   /** The maintained LAYER-1 edge table (membership: [[NswIndex
     * .atLevel]](id, 1)). */
   def edges1(spark: SparkSession, storeDir: String): DataFrame =
-    readCommitted(spark, s"$storeDir/edges1", edgeSchema, storeDir)
+    partSet(storeDir, "edges1").parts(spark)
 
   /** The maintained LAYER-2 edge table (membership: [[NswIndex
     * .atLevel]](id, 2) — the geometric P = 4⁻ˡ draw one level up, so
@@ -115,52 +95,21 @@ object StreamNswInsert {
     * coarse-entry descent survives at corpus sizes where layer 1
     * alone saturates (r14 verdict #6). */
   def edges2(spark: SparkSession, storeDir: String): DataFrame =
-    readCommitted(spark, s"$storeDir/edges2", edgeSchema, storeDir)
+    partSet(storeDir, "edges2").parts(spark)
 
-  private def readCommitted(spark: SparkSession, dir: String,
-                            schema: StructType, storeDir: String)
-      : DataFrame = {
-    recoverCompaction(dir)
-    val applied = appliedBid(storeDir)
-    if (applied < 0 || !Files.exists(Paths.get(dir)))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], schema)
-    spark.read.option("basePath", dir).parquet(dir)
-      .where(col("bid") <= applied) // torn later batches invisible
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-  }
-
-  /** Committed-sidecar filter: parts at or below the watermark —
-    * per-batch commits and the compaction rollup alike are named after
-    * their DATA directory (`bid=N`), so a sidecar part id is always a
-    * readable partition path (what [[serveGraph]]'s per-part builds
-    * rely on). A bid-shaped name that does not parse fails LOUDLY
-    * naming the entry (the DeltaPartsStore rule — silently skipping it
-    * would fold a store view that drops committed rows; a bare
-    * NumberFormatException names nothing). */
-  private def committedPart(applied: Long)(part: String): Boolean =
-    part.startsWith("bid=") && (part.drop(4).toLongOption match {
-      case Some(b) => b <= applied
-      case None => throw new IllegalStateException(
-        s"unparseable part id '$part' in an NSW store sidecar — " +
-          "expected bid=<long>; refusing to guess whether it is " +
-          "committed data")
-    })
-
-  /** Content fingerprint of one committed sub-store (`vecs` / `edges`
-    * / `edges1`) from its write-time sidecars — O(#batches) metadata
+  /** Content fingerprint of one committed sub-store (`vecs`, `edges`,
+    * `edges1` or `edges2`) from its write-time sidecars — O(#batches) metadata
     * reads, NO data scan, equal to `ArtifactStore.fingerprint` of a
     * full scan over the committed rows (spec-pinned), and invariant
     * across [[compact]] (bytes move, rows don't). */
   def storeFingerprint(storeDir: String, sub: String): String =
-    ArtifactStore.fingerprintFromParts(s"$storeDir/$sub",
-      committedPart(appliedBid(storeDir)))
+    partSet(storeDir, sub).storeFingerprint
 
-  /** Serve the maintained edge tables through the [[ArtifactStore]]
+  /** Serve the maintained edge tables through the [[graft.ops.ArtifactStore]]
     * (r13 verdict #4b): the artifact addresses derive from the store's
     * own commit-time sidecars, so q358's serving path reads the
     * MAINTAINED graph exactly like a batch-built one. PART-ADDRESSED
-    * since r14 ([[ArtifactStore.buildOrServeParts]]): each committed
+    * since r14 ([[graft.ops.ArtifactStore.buildOrServeParts]]): each committed
     * `bid=N` partition is its own artifact part, so steady-state
     * growth costs O(new batch) per serve — a micro-batch append
     * rebuilds ONE batch-sized part, never a copy of the whole edge
@@ -174,23 +123,8 @@ object StreamNswInsert {
                  layer: Int = 0): DataFrame = {
     val sub = layer match {
       case 0 => "edges"; case 1 => "edges1"; case _ => "edges2" }
-    val dir = s"$storeDir/$sub"
-    if (ArtifactStore.root(spark).isEmpty)
-      readCommitted(spark, dir, edgeSchema, storeDir)
-    else {
-      recoverCompaction(dir)
-      val parts = ArtifactStore
-        .readFpParts(dir, committedPart(appliedBid(storeDir)))
-        .map { case (pid, fp) =>
-          pid -> ArtifactStore.combineParts(Seq(fp)) }
-      if (parts.isEmpty)
-        readCommitted(spark, dir, edgeSchema, storeDir)
-      else ArtifactStore.buildOrServeParts(spark, "nsw_maintained_edges",
-        parts, params = s"layer=$layer", sourceKey = dir) { pid =>
-        spark.read.option("basePath", dir).parquet(s"$dir/$pid")
-          .select(edgeSchema.fieldNames.map(col).toIndexedSeq: _*)
-      }
-    }
+    partSet(storeDir, sub).serveParts(spark, "nsw_maintained_edges",
+      s"layer=$layer")
   }
 
   /** Apply one batch: guard, dedup, link (both layers), commit.
@@ -199,10 +133,10 @@ object StreamNswInsert {
                                 idCol: String, vecCol: String,
                                 centroids: Array[Array[Double]],
                                 probes: Int, m: Int, beamWidth: Int,
-                                rounds: Int, storeDir: String,
-                                gate: Boolean = true): Unit = {
+                                rounds: Int, storeDir: String): Unit = {
     val spark = batch.sparkSession
-    if (gate && bid <= appliedBid(storeDir)) return
+    val watermark = new Watermark(storeDir)
+    if (bid <= watermark.applied) return
     val dims = centroids(0).length
     val existing = nodes(spark, storeDir).localCheckpoint()
     val fresh = batch
@@ -215,7 +149,7 @@ object StreamNswInsert {
       .groupBy("id").agg(min("v").as("v"))
       .join(existing.select("id"), Seq("id"), "left_anti")
       .localCheckpoint() // intra-build + cross-search + write share it
-    if (fresh.isEmpty) { writeMeta(storeDir, bid); return }
+    if (fresh.isEmpty) { watermark.commit(bid); return }
 
     /** Link `arrivals` into the standing (`standNodes`, `standEdges`)
       * graph: intra-batch salt-capped build + ONE whole-batch beam
@@ -265,22 +199,11 @@ object StreamNswInsert {
     // per-batch partitions, overwrite mode: a replayed batch
     // overwrites ITSELF (data AND sidecar) — idempotent with no
     // corpus-sized anti-join
-    def commitPart(sub: String, df: DataFrame,
-                   cols: Seq[String]): Unit = {
-      val dir = s"$storeDir/$sub"
-      Fs.writer(df).mode("overwrite").parquet(s"$dir/bid=$bid")
-      // fingerprint the rows AS WRITTEN (one batch-sized file scan):
-      // the sidecar must reproduce exactly what a reader would hash
-      ArtifactStore.writeFpPart(dir, s"bid=$bid",
-        ArtifactStore.partFingerprint(
-          spark.read.parquet(s"$dir/bid=$bid")
-            .select(cols.map(col).toIndexedSeq: _*)))
-    }
-    commitPart("vecs", fresh.select(col("id"), col("v")), Seq("id", "v"))
-    commitPart("edges", newEdges, Seq("src", "dst"))
-    commitPart("edges1", newEdges1, Seq("src", "dst"))
-    commitPart("edges2", newEdges2, Seq("src", "dst"))
-    writeMeta(storeDir, bid) // commit point, strictly last
+    partSet(storeDir, "vecs").writePart(fresh, bid)
+    partSet(storeDir, "edges").writePart(newEdges, bid)
+    partSet(storeDir, "edges1").writePart(newEdges1, bid)
+    partSet(storeDir, "edges2").writePart(newEdges2, bid)
+    watermark.commit(bid) // commit point, strictly last
   }
 
   /** Laddered search over the MAINTAINED store — q362's descent on
@@ -336,87 +259,17 @@ object StreamNswInsert {
       seed(beam1.select(col("id")), e0), beamWidth, rounds)
   }
 
-  /** One-dir-per-batch growth bound (r13 verdict #4a, the StreamSplit
-    * discipline): rewrite every COMMITTED partition of each sub-store
-    * into a single `bid=<applied>` partition + one rolled-up `base`
-    * sidecar, built in a temp dir and swapped in with two atomic
-    * renames — readers never see a partial store, a crash leaves
-    * either the fragmented or the compacted state
-    * ([[recoverCompaction]] heals the in-between), and because the
-    * `_fp` sidecars ride inside the renamed dir, data and fingerprint
-    * metadata can never diverge. Rows are PRESERVED EXACTLY, so
-    * [[storeFingerprint]] — and the served artifact address — is
-    * unchanged. Torn partitions above the watermark are dropped; their
-    * batches are gate-replayed anyway. Returns true if any sub-store
-    * was rewritten. */
-  def compact(spark: SparkSession, storeDir: String,
-              minDirs: Int = 2): Boolean = {
-    val applied = appliedBid(storeDir)
-    if (applied < 0) return false
-    var any = false
-    Seq(("vecs", vecSchema), ("edges", edgeSchema),
-      ("edges1", edgeSchema), ("edges2", edgeSchema))
-      .foreach { case (sub, schema) =>
-      val dir = s"$storeDir/$sub"
-      recoverCompaction(dir)
-      val d = Paths.get(dir)
-      if (Files.isDirectory(d)) {
-        val committedDirs = listDir(d).count { p =>
-          Files.isDirectory(p) &&
-            committedPart(applied)(p.getFileName.toString)
-        }
-        if (committedDirs >= minDirs) {
-          val tmp = s"$dir.compact.tmp"
-          val old = s"$dir.compact.old"
-          deleteRec(Paths.get(tmp)); deleteRec(Paths.get(old))
-          // rewritten file count = the cumulative byte quota's group
-          // count (the q322/StreamSplit plan): never one giant file at
-          // scale, never one file per historical batch either
-          val bytes = listDir(d).filter(p => Files.isDirectory(p) &&
-              p.getFileName.toString.startsWith("bid="))
-            .flatMap(listDir).filter(_.getFileName.toString
-              .endsWith(".parquet"))
-            .map(Files.size(_)).sum
-          val k = math.max(1L,
-            (bytes + CompactTargetBytes - 1) / CompactTargetBytes).toInt
-          Fs.writer(readCommitted(spark, dir, schema, storeDir)
-            .coalesce(k)).parquet(s"$tmp/bid=$applied")
-          val parts = ArtifactStore
-            .readFpParts(dir, committedPart(applied)).map(_._2)
-          // the rollup sidecar is NAMED AFTER its data dir (bid=N) so
-          // part ids stay readable partition paths for per-part serves
-          ArtifactStore.writeFpPart(tmp, s"bid=$applied",
-            (parts.map(_._1).sum, parts.map(_._2).sum))
-          Files.move(Paths.get(dir), Paths.get(old),
-            StandardCopyOption.ATOMIC_MOVE)
-          Files.move(Paths.get(tmp), Paths.get(dir),
-            StandardCopyOption.ATOMIC_MOVE)
-          deleteRec(Paths.get(old))
-          any = true
-        }
-      }
-    }
-    any
-  }
-
-  /** Crash recovery: a compaction that died between its two renames
-    * leaves the sub-store at `<dir>.compact.old` — restore it. A
-    * leftover `.tmp` (died mid-rewrite) is garbage and is dropped. */
-  private def recoverCompaction(dir: String): Unit = {
-    val d = Paths.get(dir)
-    val old = Paths.get(dir + ".compact.old")
-    if (!Files.exists(d) && Files.exists(old))
-      Files.move(old, d, StandardCopyOption.ATOMIC_MOVE)
-    deleteRec(Paths.get(dir + ".compact.tmp"))
-  }
-
-  // one shared copy of the list/delete protocol (ops/Fs) — a
-  // hardening there lands in every store at once
-  private def listDir(p: java.nio.file.Path): Seq[java.nio.file.Path] =
-    graft.ops.Fs.ls(p)
-
-  private def deleteRec(p: java.nio.file.Path): Unit =
-    graft.ops.Fs.deleteRec(p)
+  /** One-dir-per-batch growth bound (r13 verdict #4a): rewrite every
+    * COMMITTED partition of each part set into a single
+    * `bid=<applied>` partition with one rollup sidecar
+    * ([[graft.ops.DeltaPartsStore.PartSet.compact]] — the swap is
+    * crash-safe at every point and the sidecars ride inside the
+    * swapped dir). Rows are PRESERVED EXACTLY, so [[storeFingerprint]]
+    * — and the served artifact address — is unchanged. Torn partitions
+    * above the watermark are dropped; their batches replay anyway.
+    * Returns true if any part set was rewritten. */
+  def compact(spark: SparkSession, storeDir: String): Boolean =
+    subs.map(partSet(storeDir, _).compact(spark)).contains(true)
 
   /** Wire an (id, vector) stream into the maintained graph. Compaction
     * auto-triggers once the per-batch partition count passes
@@ -430,20 +283,14 @@ object StreamNswInsert {
     stream.writeStream
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val spark = batch.sparkSession
-        val before = spark.sparkContext.getPersistentRDDs.keySet
-        try {
+        BatchBlocks.freeAfter(batch.sparkSession) {
           applyBatch(batch, bid, idCol, vecCol, centroids, probes,
             m, beamWidth, rounds, storeDir)
-          val vdir = Paths.get(s"$storeDir/vecs")
-          if (Files.isDirectory(vdir) &&
-              listDir(vdir).count(_.getFileName.toString
-                .startsWith("bid=")) > compactAfterBatches) {
-            compact(spark, storeDir)
+          if (partSet(storeDir, "vecs").partDirCount >
+              compactAfterBatches) {
+            compact(batch.sparkSession, storeDir)
             ()
           }
-        } finally spark.sparkContext.getPersistentRDDs.iterator
-          .filter { case (id, _) => !before.contains(id) }
-          .foreach { case (_, rdd) => rdd.unpersist(blocking = false) }
+        }
       }
 }

@@ -1,11 +1,13 @@
 package graft.streaming
 
 import graft.functions.TextAnalysis._
-import graft.ops.{ConnectedComponents, Dedup, Fs}
+import graft.ops.{ConnectedComponents, Dedup, DeltaPartsStore, Fs}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import java.nio.file.{Files, Path, Paths}
 
 /** Streaming cluster-consistent train/val/test split — the arrival-time
   * twin of q258: a document's split is decided ONCE, at ingest, and
@@ -78,8 +80,8 @@ object StreamSplit {
   }
 
   private def readStore(spark: SparkSession, dir: String): DataFrame = {
-    recoverCompaction(dir)
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
+    DeltaPartsStore.recoverCompaction(dir)
+    if (Files.exists(Paths.get(dir)))
       spark.read.schema(storeSchema).parquet(dir)
     else
       spark.createDataFrame(spark.sparkContext
@@ -96,101 +98,56 @@ object StreamSplit {
     * fragments without bound — the r12 verdict #6 gap. */
   val CompactAfterFiles = 64
 
-  private def partFiles(dir: String): Seq[java.nio.file.Path] = {
-    val d = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.isDirectory(d)) return Seq.empty
-    val s = java.nio.file.Files.list(d)
-    try {
-      val b = Seq.newBuilder[java.nio.file.Path]
-      s.iterator().forEachRemaining { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("part-") && n.endsWith(".parquet")) b += p
-      }
-      b.result()
-    } finally s.close()
-  }
-
-  private def deleteRec(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      val children = try {
-        val b = Seq.newBuilder[java.nio.file.Path]
-        s.iterator().forEachRemaining(b += _)
-        b.result()
-      } finally s.close()
-      children.foreach(deleteRec)
+  private def partFiles(dir: String): Seq[Path] =
+    if (!Files.isDirectory(Paths.get(dir))) Seq.empty
+    else Fs.ls(Paths.get(dir)).filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith("part-") && n.endsWith(".parquet")
     }
-    Files.deleteIfExists(p)
-  }
-
-  /** Crash recovery: a compaction that died between its two renames
-    * leaves the store at `<dir>.compact.old` — restore it. A leftover
-    * `.tmp` (died mid-rewrite) is garbage and is dropped. */
-  private def recoverCompaction(dir: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val d = Paths.get(dir)
-    val old = Paths.get(dir + ".compact.old")
-    if (!Files.exists(d) && Files.exists(old))
-      Files.move(old, d, StandardCopyOption.ATOMIC_MOVE)
-    deleteRec(Paths.get(dir + ".compact.tmp"))
-  }
 
   /** Compact the split store — the q322 planner applied to the store
     * itself: the rewritten file count is the cumulative byte quota's
-    * group count, ceil(total / targetBytes) (q322 groups consecutive
-    * shards the same way; here the whole store is one consecutive
-    * range, so the plan collapses to its group count). Rewrite is a
-    * full coalesce to that count followed by two atomic renames
-    * (store → .old, fresh → store), so a reader never sees a partial
-    * store and a crash at any point either keeps the old store or the
-    * new one ([[recoverCompaction]] heals the in-between state).
+    * group count, ceil(total / [[CompactTargetBytes]]) (q322 groups
+    * consecutive shards the same way; here the whole store is one
+    * consecutive range, so the plan collapses to its group count).
+    * Rewrite is a full coalesce to that count behind the maintained
+    * stores' compaction swap
+    * ([[graft.ops.DeltaPartsStore.rewriteSwapped]]), so a reader never
+    * sees a partial store and a crash at any point either keeps the
+    * old store or the new one (recovery heals the in-between state).
     * ASSIGNMENTS ARE PRESERVED EXACTLY — compaction moves bytes, never
     * rows; StreamSplitSpec pins the (doc_id → split) map across it.
     * Returns true when a rewrite happened. */
-  def compact(spark: SparkSession, storeDir: String,
-              targetBytes: Long = CompactTargetBytes): Boolean = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    recoverCompaction(storeDir)
+  def compact(spark: SparkSession, storeDir: String): Boolean = {
+    DeltaPartsStore.recoverCompaction(storeDir)
     val parts = partFiles(storeDir)
     if (parts.size <= 1) return false
     val total = parts.map(Files.size(_)).sum
-    val k = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
+    val k = math.max(1L,
+      (total + CompactTargetBytes - 1) / CompactTargetBytes).toInt
     if (parts.size <= k) return false
-    val tmp = storeDir + ".compact.tmp"
-    val old = storeDir + ".compact.old"
-    deleteRec(Paths.get(tmp)); deleteRec(Paths.get(old))
-    Fs.writer(spark.read.schema(storeSchema).parquet(storeDir)
-      .coalesce(k)).mode("overwrite").parquet(tmp)
-    Files.move(Paths.get(storeDir), Paths.get(old),
-      StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), Paths.get(storeDir),
-      StandardCopyOption.ATOMIC_MOVE)
-    deleteRec(Paths.get(old))
+    DeltaPartsStore.rewriteSwapped(storeDir) { tmp =>
+      Fs.writer(spark.read.schema(storeSchema).parquet(storeDir)
+        .coalesce(k)).mode("overwrite").parquet(tmp)
+    }
     true
   }
 
   /** Wire a (doc_id, text) stream into the split store at `storeDir`.
-    * After each batch's append the leftover localCheckpoint blocks
-    * (the batch frame, the store snapshot, and the signature tables
-    * Dedup checkpoints internally) are freed — without this a
-    * long-running follower accumulates one set of checkpoint RDDs per
-    * micro-batch (the KCore round-leak class). Only blocks THIS batch
-    * created are freed: the session may be shared with other streams
-    * or user-cached frames, and unpersisting a foreign localCheckpoint
-    * (lineage already truncated) makes that frame unrecoverable. */
+    * Each batch's leftover localCheckpoint blocks (the batch frame,
+    * the store snapshot, and the signature tables Dedup checkpoints
+    * internally) are freed after its append ([[BatchBlocks.freeAfter]]).
+    */
   def run(stream: DataFrame, storeDir: String,
           trigger: Trigger, threshold: Double = 0.8,
-          compactAfterFiles: Int = CompactAfterFiles,
-          compactTargetBytes: Long = CompactTargetBytes)
+          compactAfterFiles: Int = CompactAfterFiles)
       : DataStreamWriter[Row] =
     stream.writeStream
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val before = spark.sparkContext.getPersistentRDDs.keySet
-        val prior = readStore(spark, storeDir).localCheckpoint()
-        try {
+        BatchBlocks.freeAfter(spark) {
+          val prior = readStore(spark, storeDir).localCheckpoint()
           Fs.writer(assignBatch(batch, prior, threshold))
             .mode("append").parquet(storeDir)
           // retention: every append fragments the store (replays
@@ -198,11 +155,9 @@ object StreamSplit {
           // fragmentation passes the trigger, OUTSIDE the append so a
           // compaction failure never loses the batch
           if (partFiles(storeDir).size > compactAfterFiles) {
-            compact(spark, storeDir, compactTargetBytes)
+            compact(spark, storeDir)
             ()
           }
-        } finally spark.sparkContext.getPersistentRDDs.iterator
-          .filter { case (id, _) => !before.contains(id) }
-          .foreach { case (_, rdd) => rdd.unpersist(blocking = false) }
+        }
       }
 }

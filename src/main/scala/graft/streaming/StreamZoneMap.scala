@@ -1,12 +1,12 @@
 package graft.streaming
 
 import graft.functions.TextAnalysis._
+import graft.ops.Fs
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** Streaming twin of q298's zone map: the per-shard source-presence
   * bitmask is maintained incrementally as documents arrive — the way
@@ -41,12 +41,8 @@ object StreamZoneMap {
     } else new Array[Long](nShards)
   }
 
-  private def writeStore(path: String, m: Array[Long]): Unit = {
-    val tmp = Paths.get(path + ".tmp")
-    Files.write(tmp, m.mkString(",").getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeStore(path: String, m: Array[Long]): Unit =
+    Fs.writeAtomic(Paths.get(path), m.mkString(","))
 
   /** Wire a (doc_id, source) stream into the zone-map store. `sources`
     * is the fixed source universe (bit i = sources(i)). */
