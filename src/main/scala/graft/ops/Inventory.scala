@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 /** Latest-per-key ("inventory") semantics.
   *
@@ -97,29 +97,30 @@ object Inventory {
     * rewrite (the Delta/Iceberg MERGE shape without a table format).
     *
     * State lives under `stateDir` partitioned by
-    * `bucket = pmod(xxhash64(key), nBuckets)`. A batch only involves
-    * the buckets its keys hash into: those partitions are read
-    * (partition-pruned scan — untouched buckets are never opened),
-    * merged with the batch fold, and rewritten via dynamic partition
-    * overwrite — untouched bucket files stay byte-identical on disk.
-    * Per-batch cost is O(batch + touched-state); at 100 TB with, say,
-    * 64k buckets, a batch touching 1k keys rewrites ≤1k buckets
-    * (~state/64k each), not the whole table.
+    * `bucket = pmod(xxhash64(key), n)`, where `n` starts at the base
+    * count `nBuckets` and doubles as the state grows (see
+    * [[mergeBucketedBy]]). A batch only involves the buckets its keys
+    * hash into: those partitions are read (untouched buckets are never
+    * opened), merged with the batch fold, and rewritten via dynamic
+    * partition overwrite — untouched bucket files stay byte-identical
+    * on disk. Per-batch cost is O(batch + touched-state), and a bucket
+    * holds at most about [[SplitTargetBytes]] of state whatever the
+    * store's size.
     *
-    * The replay guard is PER BUCKET: each bucket carries the height it
-    * merged through, and only buckets still behind `mergedHeight` are
-    * merged and rewritten. A crash mid-write leaves some buckets ahead
-    * — the replay then completes exactly the lagging ones, never
-    * double-folding the finished ones (exactly-once per bucket).
-    * Returns true when any bucket was merged, false when all were
-    * already at `mergedHeight` (or the batch was empty).
+    * The replay guard is PER BUCKET: a bucket that already has a
+    * version at `mergedHeight` is not merged again. A crash mid-write
+    * leaves some buckets ahead — the replay then completes exactly the
+    * lagging ones, never double-folding the finished ones
+    * (exactly-once per bucket). Returns true when any bucket was
+    * merged, false when all were already at `mergedHeight` (or the
+    * batch was empty).
     */
   def mergeBucketedState(spark: SparkSession, stateDir: String,
                          batch: DataFrame, key: Seq[String], ver: String,
                          latestCols: Seq[String],
                          coalesceCols: Set[String] = Set.empty,
                          touch: Option[(String, Column)] = None,
-                         nBuckets: Int = 64,
+                         nBuckets: Int = 1,
                          mergedHeight: Long = 0L): Boolean =
     mergeBucketedBy(spark, stateDir, batch, key, nBuckets, mergedHeight) {
       case (None, b) => latestPerKey(b, key, ver, latestCols,
@@ -128,12 +129,21 @@ object Inventory {
         coalesceCols, touch)
     }
 
+  /** Current-version parquet bytes per bucket past which a merge
+    * doubles the store's bucket count. Each bucket a batch touches is
+    * rewritten whole, so the target bounds a follower's per-commit
+    * rewrite per touched key, while the count of files a backfill
+    * commit writes follows the state's size instead of a fixed fan-out.
+    */
+  val SplitTargetBytes: Long = 4L << 20
+
   /** The generic bucket-partitioned state driver: handles bucket
-    * assignment, touched/behind selection, the partition-pruned prior
-    * read, and the dynamic-overwrite write — `combine(priorBehind,
-    * batchBehind)` supplies the merge semantics (latest-per-key,
-    * additive balances, subnet accumulation, …) and must emit the key
-    * columns unchanged so the bucket re-derives identically.
+    * assignment, touched/behind selection, the prior read, the bucket
+    * count's growth, and the dynamic-overwrite write —
+    * `combine(priorBehind, batchBehind)` supplies the merge semantics
+    * (latest-per-key, additive balances, subnet accumulation, …) and
+    * must emit the key columns unchanged so the bucket re-derives
+    * identically.
     *
     * On-disk layout is MVCC: `bucket=B/merged_height=H/…` — a merge
     * writes each rewritten bucket as a NEW version partition and never
@@ -143,13 +153,60 @@ object Inventory {
     * half-written; superseded versions are reclaimed by
     * [[vacuumBucketedState]] AFTER the commit point, never during the
     * write.
+    *
+    * Bucket count: `nBuckets` is the base count, pinned in
+    * `_n_buckets`. When the live state's bytes per bucket exceed
+    * [[SplitTargetBytes]], the merge at height H doubles the count and
+    * rewrites EVERY bucket under it: with `bucket = pmod(hash, n)`,
+    * bucket b splits exactly into b and b+n, so new bucket c takes the
+    * rows of old bucket `c mod n` that hash to c. The doubling is
+    * recorded in `_bucket_doublings` before the split's first data
+    * file; a torn split resumes through the per-bucket replay guard,
+    * and [[liveVersions]] never lets a version older than the split
+    * back into a read. Each byte is rewritten an amortized O(1) times
+    * by splits, as in linear hashing.
     */
   def mergeBucketedBy(spark: SparkSession, stateDir: String,
                       batch: DataFrame, key: Seq[String], nBuckets: Int,
                       mergedHeight: Long)
                      (combine: (Option[DataFrame], DataFrame) => DataFrame)
       : Boolean = {
-    val bucket = pmod(xxhash64(key.map(col): _*), lit(nBuckets)).cast("int")
+    // the bucket function is part of the state's on-disk layout: a
+    // drifted base count would hash keys into different buckets than
+    // the stored rows, duplicating keys and resurrecting stale rows
+    // with no error — pinned before the store's first data write,
+    // validated on every merge
+    val nbPath = Paths.get(s"$stateDir/_n_buckets")
+    val pinned = Files.exists(nbPath)
+    if (pinned) {
+      val body = new String(Files.readAllBytes(nbPath), "UTF-8").trim
+      val storedN = body.toIntOption.getOrElse(throw new IllegalStateException(
+        s"unparseable bucket-count pin $nbPath: '$body'"))
+      require(storedN == nBuckets,
+        s"state at $stateDir was written with nBuckets=$storedN, got $nBuckets")
+    }
+    // the layout below this merge from the driver listing (no data
+    // read): the doublings, each bucket's versions, and the live
+    // version leaves with their files
+    val splits = doublings(stateDir)
+    val versions = bucketVersions(stateDir)
+    require(mergedHeight > 0L || versions.isEmpty,
+      s"inventory merge at $stateDir: height 0 folds only into an empty " +
+        "store — the per-bucket replay guard needs a height per merge")
+    val below = nBuckets << splits.count(_ < mergedHeight)
+    val priorFiles = liveAt(versions, splits, mergedHeight - 1)
+      .map(bv => bv -> CommittedParquet.dataFiles(leaf(stateDir, bv))).toMap
+    val recorded = splits.contains(mergedHeight)
+    // only a merge that has written nothing at this height decides a
+    // split, from state strictly below it — a replay therefore resumes
+    // exactly the layout its first attempt chose
+    val split = recorded || (
+      mergedHeight > splits.lastOption.getOrElse(0L) &&
+        !versions.values.exists(_.contains(mergedHeight)) &&
+        priorFiles.values.flatten.map(Files.size).sum >
+          SplitTargetBytes * below)
+    val n = if (split) below * 2 else below
+    val bucket = pmod(xxhash64(key.map(col): _*), lit(n)).cast("int")
     // the batch lineage can be expensive (JSON parse + explode for the
     // ledger folds) and is consumed twice (touched-bucket discovery and
     // the merge) — materialize it once. Touched-bucket discovery rides
@@ -163,40 +220,30 @@ object Inventory {
     val touched = obs.get("touched").asInstanceOf[scala.collection.Seq[Int]]
       .toArray.sorted
     if (touched.isEmpty) return false
-    val hasState = Files.exists(Paths.get(stateDir))
-    // the bucket function is part of the state's on-disk layout: a
-    // drifted nBuckets would hash keys into different buckets than the
-    // stored rows, duplicating keys and resurrecting stale rows with no
-    // error — pinned before the store's first data write, validated on
-    // every merge
-    val nbPath = Paths.get(s"$stateDir/_n_buckets")
-    val pinned = Files.exists(nbPath)
-    if (pinned) {
-      val body = new String(Files.readAllBytes(nbPath), "UTF-8").trim
-      val storedN = body.toIntOption.getOrElse(throw new IllegalStateException(
-        s"unparseable bucket-count pin $nbPath: '$body'"))
-      require(storedN == nBuckets,
-        s"state at $stateDir was written with nBuckets=$storedN, got $nBuckets")
-    }
-    // current version per bucket from the partition layout (driver-side
-    // listing — no data read)
-    val versions = if (hasState) bucketVersions(stateDir) else Map.empty[Int, Seq[Long]]
-    val bucketHeights: Map[Int, Long] =
-      versions.collect { case (bk, vs) if vs.nonEmpty => bk -> vs.max }
-    val behind =
-      if (mergedHeight == 0L) touched
-      else touched.filter(bk => bucketHeights.getOrElse(bk, 0L) < mergedHeight)
+    // a bucket is merged when it has no version at this height under
+    // the count in force here — on a split, every bucket
+    val candidates = if (split) (0 until n).toArray else touched
+    val behind = candidates.filterNot(bk =>
+      versions.get(bk).exists(_.contains(mergedHeight)))
     if (behind.isEmpty) return false
     // atomic, and strictly before any data file: a crash can leave a
     // pin without data, never data without a pin
     if (!pinned) Fs.writeAtomic(nbPath, nBuckets.toString)
+    // the same order for a doubling: a crash leaves the record without
+    // split data (its replay resumes the split), never split data
+    // under the old count
+    if (split && !recorded)
+      Fs.writeAtomic(layoutPath(stateDir),
+        renderDoublings(splits :+ mergedHeight))
+    val behindVals = behind.map(x => x: Any)
     val bBehind = withBucket
-      .filter(col("bucket").isin(behind.map(x => x: Any): _*))
+      .filter(col("bucket").isin(behindVals: _*))
       .drop("bucket")
-    // prior read: only the behind buckets' CURRENT versions are opened
-    // (older versions awaiting vacuum are skipped). The driver lists
-    // those version-LEAF directories itself and [[CommittedParquet]]
-    // reads exactly their files (table root as base, so the partition
+    // prior read: each behind bucket's source under the count below
+    // this height (the bucket itself, or on a split the bucket it
+    // halves, `c mod below`) at its live version — older versions
+    // awaiting vacuum are skipped. [[CommittedParquet]] reads exactly
+    // the listed leaves' files (table root as base, so the partition
     // columns are the ones a root scan yields): no listing or schema
     // job runs before the merge, and the write below targets a
     // DIFFERENT root path than any input relation, so the merge+write
@@ -204,8 +251,9 @@ object Inventory {
     // read-your-own-output-path rule. MVCC makes the overlap safe:
     // the write creates only NEW (bucket, merged_height) version
     // dirs, never touching the leaf files being read.
-    val priorPairs = behind.toSeq
-      .flatMap(bk => bucketHeights.get(bk).map(bk -> _))
+    val sources = behind.map(_ % below).toSet
+    val priorPairs = priorFiles.keys.filter(bv => sources(bv._1))
+      .toSeq.sorted
     // the one-job merge+write overlap below is safe ONLY because the
     // write creates strictly NEW (bucket, merged_height) version dirs
     // while the read holds strictly OLDER ones — a replay/refactor
@@ -217,14 +265,20 @@ object Inventory {
         "assumption the single-job merge rests on is violated")
     val priorBehind =
       if (priorPairs.isEmpty) None
-      else Some(readVersions(spark, stateDir, priorPairs)
-        .drop("bucket", "merged_height"))
+      else {
+        val rows = CommittedParquet.read(spark,
+            priorPairs.flatMap(priorFiles), Some(stateDir))
+          .drop("bucket", "merged_height")
+        // a resumed split redoes only some new buckets, and each
+        // source also holds the keys of its other half
+        Some(if (split && behind.length < n)
+          rows.filter(bucket.isin(behindVals: _*)) else rows)
+      }
     // state and batch agree on the hash, so the merge re-derives the
-    // bucket from the key — no cross-bucket movement possible.
-    // Dynamic overwrite targets the (bucket, NEW version) partitions —
-    // existing version partitions, including the ones the last commit
-    // references, are never touched; untouched buckets stay
-    // byte-identical on disk.
+    // bucket from the key. Dynamic overwrite targets the (bucket, NEW
+    // version) partitions — existing version partitions, including the
+    // ones the last commit references, are never touched; untouched
+    // buckets stay byte-identical on disk.
     val merged = combine(priorBehind, bBehind).withColumn("bucket", bucket)
       .withColumn("merged_height", lit(mergedHeight))
     def writeMerged(df: DataFrame): Unit =
@@ -245,15 +299,19 @@ object Inventory {
     // read-back (same guard as ArtifactStore.writeWithFingerprint). A
     // crash between the data write and the sidecar writes leaves
     // versions without sidecars; [[committedStateParts]] heals from
-    // the data layout, which stays the source of truth.
+    // the data layout, which stays the source of truth. A bucket a
+    // split left empty gets neither data nor a sidecar.
     val dataCols = merged.columns.toSeq
       .filterNot(Set("bucket", "merged_height"))
     val fps = ArtifactStore.observedPartFingerprints(merged, "bucket",
         behind.toSeq, dataCols)(writeMerged)
       .getOrElse {
-        val back = readVersions(spark, stateDir,
-          behind.toSeq.map(_ -> mergedHeight))
-        ArtifactStore.partFingerprints(back, "bucket", dataCols)
+        val written = behind.toSeq.flatMap(bk => CommittedParquet.dataFiles(
+          leaf(stateDir, bk -> mergedHeight)))
+        if (written.isEmpty) Seq.empty
+        else ArtifactStore.partFingerprints(
+            CommittedParquet.read(spark, written, Some(stateDir)),
+            "bucket", dataCols)
           .map { case (pid, fp) =>
             pid.stripPrefix("bucket=").toInt -> fp }
       }
@@ -263,20 +321,66 @@ object Inventory {
     true
   }
 
-  /** The `(bucket, merged_height)` version leaves `versions` of a
-    * bucketed store as one frame over their files, the layout kept as
-    * partition columns (`basePath` = the store root). */
-  private def readVersions(spark: SparkSession, stateDir: String,
-                           versions: Seq[(Int, Long)]): DataFrame =
-    CommittedParquet.read(spark,
-      versions.flatMap { case (bk, v) => CommittedParquet.dataFiles(
-        Paths.get(s"$stateDir/bucket=$bk/merged_height=$v")) },
-      Some(stateDir))
+  /** The version-leaf directory of `(bucket, merged_height)`. */
+  private def leaf(stateDir: String, bv: (Int, Long)): Path =
+    Paths.get(s"$stateDir/bucket=${bv._1}/merged_height=${bv._2}")
+
+  private def layoutPath(stateDir: String): Path =
+    Paths.get(s"$stateDir/_bucket_doublings")
+
+  private val DoublingsRe = """\{"doubled_at":\[(\d+(?:,\d+)*)\]\}""".r
+
+  private def renderDoublings(hs: Seq[Long]): String =
+    hs.mkString("""{"doubled_at":[""", ",", "]}")
+
+  /** The heights at which the store's bucket count doubled, ascending
+    * (empty: still at its base count). The count in force at height h
+    * is the base count times 2 per doubling at or below h. A layout
+    * file of any other shape fails LOUDLY with its path — a guessed
+    * count would hash keys into the wrong buckets. */
+  def doublings(stateDir: String): Seq[Long] = {
+    val p = layoutPath(stateDir)
+    if (!Files.exists(p)) return Seq.empty
+    val body = new String(Files.readAllBytes(p), "UTF-8").trim
+    def bad = new IllegalStateException(s"unparseable bucket layout $p: " +
+      s"""'$body' — expected {"doubled_at":[<height>,…]}, ascending""")
+    body match {
+      case DoublingsRe(list) =>
+        val hs = list.split(',').toSeq.map(_.toLongOption.getOrElse(throw bad))
+        if (hs.zip(hs.drop(1)).exists { case (a, b) => a >= b }) throw bad
+        hs
+      case _ => throw bad
+    }
+  }
+
+  /** The live version of each bucket at height `h` — the one resolver
+    * behind every read, commit manifest, part map and vacuum: the
+    * bucket's newest version at or below `h`, and never one older than
+    * the newest doubling at or below `h`. The doubling rewrote every
+    * bucket, so an older version holds rows that have since moved: a
+    * bucket the split left empty must not bring them back. */
+  def liveVersions(stateDir: String, h: Long): Seq[(Int, Long)] =
+    liveAt(bucketVersions(stateDir), doublings(stateDir), h)
+
+  private def liveAt(versions: Map[Int, Seq[Long]], splits: Seq[Long],
+                     h: Long): Seq[(Int, Long)] = {
+    val floor = splits.filter(_ <= h).lastOption.getOrElse(Long.MinValue)
+    versions.toSeq.sortBy(_._1).flatMap { case (bk, vs) =>
+      vs.filter(v => v >= floor && v <= h).maxOption.map(bk -> _)
+    }
+  }
+
+  /** The data files of the live versions at height `h`
+    * ([[liveVersions]]) — the file set a commit manifest at `h` lists
+    * and [[readBucketedStateAt]] reads. */
+  def liveFiles(stateDir: String, h: Long): Seq[Path] =
+    liveVersions(stateDir, h).flatMap(bv =>
+      CommittedParquet.dataFiles(leaf(stateDir, bv)))
 
   private val StatePartIdRe = """bucket=(\d+)\.mh=(\d+)""".r
 
   /** The committed (partId → part fingerprint) map of a bucketed MVCC
-    * store: each bucket's newest version at or below `committed` —
+    * store: the live versions at `committed` ([[liveVersions]]) —
     * exactly the file set [[readBucketedStateAt]] reads — with the
     * fingerprint answered from the write-time sidecar. The DATA layout
     * is the source of truth: a version whose sidecar is missing (a
@@ -289,17 +393,15 @@ object Inventory {
   def committedStateParts(spark: SparkSession, stateDir: String,
                           committed: Long): Seq[(String, String)] = {
     val sidecars = ArtifactStore.readFpParts(stateDir).toMap
-    bucketVersions(stateDir).toSeq.sortBy(_._1).flatMap { case (bk, vs) =>
-      vs.filter(_ <= committed).sorted.lastOption.map { v =>
-        val pid = s"bucket=$bk.mh=$v"
-        val fp = sidecars.getOrElse(pid, {
-          val healed = ArtifactStore.partFingerprint(
-            readStatePart(spark, stateDir, pid))
-          ArtifactStore.writeFpPart(stateDir, pid, healed)
-          healed
-        })
-        pid -> ArtifactStore.combineParts(Seq(fp))
-      }
+    liveVersions(stateDir, committed).map { case (bk, v) =>
+      val pid = s"bucket=$bk.mh=$v"
+      val fp = sidecars.getOrElse(pid, {
+        val healed = ArtifactStore.partFingerprint(
+          readStatePart(spark, stateDir, pid))
+        ArtifactStore.writeFpPart(stateDir, pid, healed)
+        healed
+      })
+      pid -> ArtifactStore.combineParts(Seq(fp))
     }
   }
 
@@ -310,7 +412,7 @@ object Inventory {
                     pid: String): DataFrame = pid match {
     case StatePartIdRe(bk, mh) =>
       CommittedParquet.read(spark, CommittedParquet.dataFiles(
-        Paths.get(s"$stateDir/bucket=$bk/merged_height=$mh")))
+        leaf(stateDir, bk.toInt -> mh.toLong)))
     case _ => throw new IllegalStateException(
       s"unparseable inventory part id '$pid' — expected bucket=<n>.mh=<h>")
   }
@@ -335,47 +437,77 @@ object Inventory {
       }.toMap
   }
 
-  /** Reclaim superseded bucket versions: for each bucket, keep the
-    * newest version at or below `committed` (the one the current commit
-    * manifest references) plus any versions ABOVE it (a half-written
-    * next batch — its replay will reuse them); delete the rest. Call
-    * only AFTER the commit point that stops referencing them.
+  /** Reclaim every version at or below `committed` that is not live
+    * there ([[liveVersions]]): the bucket's superseded versions, and
+    * all versions older than a doubling. Versions ABOVE `committed`
+    * (a half-written next batch) are left to [[dropAbove]]. Call only
+    * AFTER the commit point that stops referencing them.
     */
   def vacuumBucketedState(stateDir: String, committed: Long): Unit = {
-    bucketVersions(stateDir).foreach { case (bk, vs) =>
-      val keepFloor = vs.filter(_ <= committed).sorted.lastOption
-      keepFloor.foreach { floor =>
-        vs.filter(_ < floor).foreach { v =>
-          val dir = Paths.get(s"$stateDir/bucket=$bk/merged_height=$v")
-          Fs.walk(dir).reverse
-            .foreach(Files.deleteIfExists(_))
-          // the version's sidecar goes with its data — the store
-          // vacuums its own metadata (otherwise _fp grows one file
-          // per superseded version forever)
-          Files.deleteIfExists(
-            Paths.get(s"$stateDir/_fp/bucket=$bk.mh=$v.json"))
-          ()
-        }
-      }
+    val versions = bucketVersions(stateDir)
+    val live = liveAt(versions, doublings(stateDir), committed).toSet
+    versions.foreach { case (bk, vs) =>
+      dropVersions(stateDir, bk, vs,
+        vs.filter(v => v <= committed && !live(bk -> v)))
     }
   }
 
-  /** Read bucketed state back without the physical columns: each
-    * bucket's CURRENT (max-version) partition only — superseded
-    * versions awaiting vacuum are pruned out at the partition level.
+  /** Remove what a torn merge left ABOVE `committed`: its version
+    * leaves with their sidecars, then the doublings it recorded. A
+    * replay may arrive with other batch boundaries than the torn
+    * batch; left in place, a torn version would count as merged, and
+    * a torn split's record would hide every bucket it had not
+    * rewritten yet. Call before the next batch writes anything. */
+  def dropAbove(stateDir: String, committed: Long): Unit = {
+    bucketVersions(stateDir).foreach { case (bk, vs) =>
+      dropVersions(stateDir, bk, vs, vs.filter(_ > committed))
+    }
+    // and a sidecar whose data write never landed
+    val fp = Paths.get(s"$stateDir/_fp")
+    if (Files.isDirectory(fp)) Fs.ls(fp).foreach { p =>
+      p.getFileName.toString.stripSuffix(".json") match {
+        case StatePartIdRe(_, mh) if mh.toLong > committed =>
+          Files.delete(p)
+        case _ =>
+      }
+    }
+    val splits = doublings(stateDir)
+    val kept = splits.filter(_ <= committed)
+    if (kept.isEmpty) Files.deleteIfExists(layoutPath(stateDir))
+    else if (kept.size < splits.size)
+      Fs.writeAtomic(layoutPath(stateDir), renderDoublings(kept))
+  }
+
+  /** Delete bucket `bk`'s versions `drop` (of all its versions `vs`)
+    * and their sidecars — the sidecar goes with its data, or `_fp`
+    * would grow one file per superseded version forever — and the
+    * bucket directory with its last version. */
+  private def dropVersions(stateDir: String, bk: Int, vs: Seq[Long],
+                           drop: Seq[Long]): Unit = {
+    drop.foreach { v =>
+      Fs.deleteRec(leaf(stateDir, bk -> v))
+      Files.deleteIfExists(
+        Paths.get(s"$stateDir/_fp/bucket=$bk.mh=$v.json"))
+    }
+    if (drop.nonEmpty && drop.size == vs.size)
+      Fs.deleteRec(Paths.get(s"$stateDir/bucket=$bk"))
+  }
+
+  /** Read bucketed state back without the physical columns: the live
+    * versions at the newest height ([[liveVersions]]) — superseded
+    * versions awaiting vacuum are never opened.
     */
   def readBucketedState(spark: SparkSession, stateDir: String): DataFrame =
     readBucketedStateAt(spark, stateDir, Long.MaxValue)
 
-  /** Snapshot read: each bucket's newest version at or below
-    * `committed` (the file set a commit manifest at that height pins).
+  /** Snapshot read: the live versions at `committed` (the file set a
+    * commit manifest at that height pins).
     */
   def readBucketedStateAt(spark: SparkSession, stateDir: String,
                           committed: Long): DataFrame = {
-    val pairs = bucketVersions(stateDir).toSeq.flatMap { case (bk, vs) =>
-      vs.filter(_ <= committed).sorted.lastOption.map(bk -> _)
-    }
-    require(pairs.nonEmpty, s"no committed state at $stateDir")
-    readVersions(spark, stateDir, pairs).drop("bucket", "merged_height")
+    val files = liveFiles(stateDir, committed)
+    require(files.nonEmpty, s"no committed state at $stateDir")
+    CommittedParquet.read(spark, files, Some(stateDir))
+      .drop("bucket", "merged_height")
   }
 }

@@ -256,10 +256,13 @@ object BlockIngest {
     val committed = committedHeight(sinkDir)
     val k = ensureLayout(sinkDir, bucketBlocks)
     // recovery strictly before any write: restore a torn compaction
-    // and remove torn slices a crashed batch left above the watermark
-    // (they would become VISIBLE once the watermark passes them)
+    // and remove torn slices and inventory versions a crashed batch
+    // left above the watermark (they would become VISIBLE once the
+    // watermark passes them, whatever the replay's batch boundaries)
     recoverFactCompaction(sinkDir)
     cleanTornSlices(sinkDir, committed)
+    inventoryTables.foreach(t =>
+      Inventory.dropAbove(s"$sinkDir/$t", committed))
     // replay filter: already-committed heights are dropped (idempotence)
     val fresh = batch.filter(col("height") > committed).cache()
     try {
@@ -472,7 +475,7 @@ object BlockIngest {
     Inventory.mergeBucketedState(spark, s"$sinkDir/actor_inventory",
       batchActors, Seq("actor"), "block", Seq("actor_role"),
       touch = Some("updated_at" -> timestamp_seconds(lit(batchTime))),
-      nBuckets = 64, mergedHeight = newCommitted)
+      nBuckets = 1, mergedHeight = newCommitted)
   }
 
   /** gateway_inventory — the reference's key trigger-maintained derived
@@ -517,7 +520,7 @@ object BlockIngest {
     Inventory.mergeBucketedState(spark, invDir, rows, Seq("address"), "ver",
       cols, coalesceCols,
       touch = Some("updated_at" -> timestamp_seconds(lit(batchTime))),
-      nBuckets = 64, mergedHeight = newCommitted)
+      nBuckets = 1, mergedHeight = newCommitted)
   }
 
   /** validator_inventory — same trigger-upsert pattern for the validator
@@ -570,7 +573,7 @@ object BlockIngest {
     Inventory.mergeBucketedState(spark, invDir, rows, Seq("address"), "ver",
       cols, co,
       touch = Some("updated_at" -> timestamp_seconds(lit(batchTime))),
-      nBuckets = 64, mergedHeight = newCommitted)
+      nBuckets = 1, mergedHeight = newCommitted)
   }
 
   /** account_inventory — balances per account rolled forward per batch
@@ -586,7 +589,7 @@ object BlockIngest {
     // per-bucket replay guard is load-bearing (a double fold would
     // double-count) — exactly-once per bucket across crashes
     Inventory.mergeBucketedBy(spark, s"$sinkDir/account_inventory",
-      AccountLedger.deltas(txns), Seq("address"), 64, newCommitted) {
+      AccountLedger.deltas(txns), Seq("address"), 1, newCommitted) {
       case (None, d) => AccountLedger.finish(AccountLedger.fold(d))
       case (Some(st), d) => AccountLedger.merge(st, AccountLedger.fold(d))
     }
@@ -601,7 +604,7 @@ object BlockIngest {
   private def mergeOuiInventory(spark: SparkSession, sinkDir: String,
                                 newCommitted: Long, txns: DataFrame): Unit = {
     Inventory.mergeBucketedBy(spark, s"$sinkDir/oui_inventory",
-      OuiLedger.rows(txns), Seq("oui"), 16, newCommitted) {
+      OuiLedger.rows(txns), Seq("oui"), 1, newCommitted) {
       case (None, r) => OuiLedger.finish(OuiLedger.fold(r))
       case (Some(st), r) => OuiLedger.merge(st, OuiLedger.fold(r))
     }
@@ -1239,21 +1242,8 @@ object BlockIngest {
       }
       table -> fs.map(rel)
     }
-    val invs = inventoryTables.map { table =>
-      val stateDir = s"$sinkDir/$table"
-      val live = Inventory.bucketVersions(stateDir).toSeq
-        .flatMap { case (bk, vs) =>
-          vs.filter(_ <= height).sorted.lastOption.map(v =>
-            s"bucket=$bk/merged_height=$v")
-        }.toSet
-      val root = Paths.get(stateDir)
-      val fs = CommittedParquet.dataFiles(root).filter { f =>
-        val segs = root.relativize(f)
-          .iterator().asScala.map(_.toString).toSeq
-        segs.length >= 3 && live.contains(s"${segs(0)}/${segs(1)}")
-      }
-      table -> fs.map(rel)
-    }
+    val invs = inventoryTables.map(table =>
+      table -> Inventory.liveFiles(s"$sinkDir/$table", height).map(rel))
     val stats = {
       val statsDir = s"$sinkDir/stats_inventory"
       val keep = statsVersions(statsDir).filter(_ <= height).sorted.lastOption

@@ -20,6 +20,7 @@ object SparkSpec {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
