@@ -129,11 +129,14 @@ object Inventory {
         coalesceCols, touch)
     }
 
-  /** Current-version parquet bytes per bucket past which a merge
-    * doubles the store's bucket count. Each bucket a batch touches is
+  /** Live parquet bytes per touched bucket past which a merge doubles
+    * the store's bucket count. Each bucket a batch touches is
     * rewritten whole, so the target bounds a follower's per-commit
     * rewrite per touched key, while the count of files a backfill
     * commit writes follows the state's size instead of a fixed fan-out.
+    * Of the targets measured against the fixed 64 buckets on 5–86 MB
+    * stores (256 KiB to 4 MiB, plans/r18/split-target.md), 4 MiB had
+    * the smallest worst ratio over follow and backfill merges.
     */
   val SplitTargetBytes: Long = 4L << 20
 
@@ -155,9 +158,10 @@ object Inventory {
     * write.
     *
     * Bucket count: `nBuckets` is the base count, pinned in
-    * `_n_buckets`. When the live state's bytes per bucket exceed
-    * [[SplitTargetBytes]], the merge at height H doubles the count and
-    * rewrites EVERY bucket under it: with `bucket = pmod(hash, n)`,
+    * `_n_buckets`. When the live parquet bytes of the buckets a batch
+    * touches average more than [[SplitTargetBytes]], the merge at
+    * height H doubles the count and rewrites EVERY bucket under it:
+    * with `bucket = pmod(hash, n)`,
     * bucket b splits exactly into b and b+n, so new bucket c takes the
     * rows of old bucket `c mod n` that hash to c. The doubling is
     * recorded in `_bucket_doublings` before the split's first data
@@ -176,59 +180,67 @@ object Inventory {
     // the stored rows, duplicating keys and resurrecting stale rows
     // with no error — pinned before the store's first data write,
     // validated on every merge
-    val nbPath = Paths.get(s"$stateDir/_n_buckets")
-    val pinned = Files.exists(nbPath)
-    if (pinned) {
-      val body = new String(Files.readAllBytes(nbPath), "UTF-8").trim
-      val storedN = body.toIntOption.getOrElse(throw new IllegalStateException(
-        s"unparseable bucket-count pin $nbPath: '$body'"))
-      require(storedN == nBuckets,
-        s"state at $stateDir was written with nBuckets=$storedN, got $nBuckets")
-    }
+    val pin = pinnedBuckets(stateDir)
+    pin.foreach(storedN => require(storedN == nBuckets,
+      s"state at $stateDir was written with nBuckets=$storedN, got $nBuckets"))
     // the layout below this merge from the driver listing (no data
     // read): the doublings, each bucket's versions, and the live
-    // version leaves with their files
+    // version under the count below this height
     val splits = doublings(stateDir)
     val versions = bucketVersions(stateDir)
     require(mergedHeight > 0L || versions.isEmpty,
       s"inventory merge at $stateDir: height 0 folds only into an empty " +
         "store — the per-bucket replay guard needs a height per merge")
     val below = nBuckets << splits.count(_ < mergedHeight)
-    val priorFiles = liveAt(versions, splits, mergedHeight - 1)
-      .map(bv => bv -> CommittedParquet.dataFiles(leaf(stateDir, bv))).toMap
-    val recorded = splits.contains(mergedHeight)
-    // only a merge that has written nothing at this height decides a
-    // split, from state strictly below it — a replay therefore resumes
-    // exactly the layout its first attempt chose
-    val split = recorded || (
-      mergedHeight > splits.lastOption.getOrElse(0L) &&
-        !versions.values.exists(_.contains(mergedHeight)) &&
-        priorFiles.values.flatten.map(Files.size).sum >
-          SplitTargetBytes * below)
-    val n = if (split) below * 2 else below
-    val bucket = pmod(xxhash64(key.map(col): _*), lit(n)).cast("int")
+    val prior = liveAt(versions, splits, mergedHeight - 1).toMap
     // the batch lineage can be expensive (JSON parse + explode for the
     // ledger folds) and is consumed twice (touched-bucket discovery and
     // the merge) — materialize it once. Touched-bucket discovery rides
     // the SAME checkpoint job as a collect_set observe metric: the
     // separate distinct().collect() was one more serialized job (plus
     // its shuffle) per inventory per batch, pure scheduling latency.
+    // The bucket is taken under TWICE the count below: its residue
+    // mod `below` is the bucket under `below`, so one job serves
+    // either side of the split decision.
     val obs = org.apache.spark.sql.Observation()
-    val withBucket = batch.withColumn("bucket", bucket)
+    val withBucket = batch
+      .withColumn("bucket", pmod(xxhash64(key.map(col): _*), lit(below * 2))
+        .cast("int"))
       .observe(obs, collect_set(col("bucket")).as("touched"))
       .localCheckpoint()
-    val touched = obs.get("touched").asInstanceOf[scala.collection.Seq[Int]]
-      .toArray.sorted
-    if (touched.isEmpty) return false
+    val touchedUp = obs.get("touched")
+      .asInstanceOf[scala.collection.Seq[Int]].toArray
+    if (touchedUp.isEmpty) return false
+    val touchedBelow = touchedUp.map(_ % below).distinct.sorted
+    // only a merge that has written nothing at this height decides a
+    // split, from state strictly below it — a replay therefore resumes
+    // exactly the layout its first attempt chose. The decision reads
+    // the sizes of the live leaves the merge lists anyway, the touched
+    // buckets': the hash spreads keys evenly, so their mean stands for
+    // every bucket's
+    val filesOf = scala.collection.mutable.Map.empty[(Int, Long), Seq[Path]]
+    def files(bv: (Int, Long)): Seq[Path] =
+      filesOf.getOrElseUpdate(bv, CommittedParquet.dataFiles(leaf(stateDir, bv)))
+    val recorded = splits.contains(mergedHeight)
+    val split = recorded || (
+      mergedHeight > splits.lastOption.getOrElse(0L) &&
+        !versions.values.exists(_.contains(mergedHeight)) &&
+        touchedBelow.flatMap(bk => prior.get(bk).map(v => bk -> v))
+          .flatMap(files).map(Files.size).sum >
+          SplitTargetBytes * touchedBelow.length)
+    val n = if (split) below * 2 else below
+    val bucket = pmod(xxhash64(key.map(col): _*), lit(n)).cast("int")
+    val batchBucket = if (split) col("bucket") else col("bucket") % below
     // a bucket is merged when it has no version at this height under
     // the count in force here — on a split, every bucket
-    val candidates = if (split) (0 until n).toArray else touched
+    val candidates =
+      if (split) (0 until n).toArray else touchedBelow
     val behind = candidates.filterNot(bk =>
       versions.get(bk).exists(_.contains(mergedHeight)))
     if (behind.isEmpty) return false
     // atomic, and strictly before any data file: a crash can leave a
     // pin without data, never data without a pin
-    if (!pinned) Fs.writeAtomic(nbPath, nBuckets.toString)
+    if (pin.isEmpty) Fs.writeAtomic(pinPath(stateDir), nBuckets.toString)
     // the same order for a doubling: a crash leaves the record without
     // split data (its replay resumes the split), never split data
     // under the old count
@@ -237,7 +249,7 @@ object Inventory {
         renderDoublings(splits :+ mergedHeight))
     val behindVals = behind.map(x => x: Any)
     val bBehind = withBucket
-      .filter(col("bucket").isin(behindVals: _*))
+      .filter(batchBucket.isin(behindVals: _*))
       .drop("bucket")
     // prior read: each behind bucket's source under the count below
     // this height (the bucket itself, or on a split the bucket it
@@ -251,9 +263,8 @@ object Inventory {
     // read-your-own-output-path rule. MVCC makes the overlap safe:
     // the write creates only NEW (bucket, merged_height) version
     // dirs, never touching the leaf files being read.
-    val sources = behind.map(_ % below).toSet
-    val priorPairs = priorFiles.keys.filter(bv => sources(bv._1))
-      .toSeq.sorted
+    val priorPairs = behind.map(_ % below).distinct.sorted.toSeq
+      .flatMap(bk => prior.get(bk).map(bk -> _))
     // the one-job merge+write overlap below is safe ONLY because the
     // write creates strictly NEW (bucket, merged_height) version dirs
     // while the read holds strictly OLDER ones — a replay/refactor
@@ -267,7 +278,7 @@ object Inventory {
       if (priorPairs.isEmpty) None
       else {
         val rows = CommittedParquet.read(spark,
-            priorPairs.flatMap(priorFiles), Some(stateDir))
+            priorPairs.flatMap(files), Some(stateDir))
           .drop("bucket", "merged_height")
         // a resumed split redoes only some new buckets, and each
         // source also holds the keys of its other half
@@ -324,6 +335,21 @@ object Inventory {
   /** The version-leaf directory of `(bucket, merged_height)`. */
   private def leaf(stateDir: String, bv: (Int, Long)): Path =
     Paths.get(s"$stateDir/bucket=${bv._1}/merged_height=${bv._2}")
+
+  private def pinPath(stateDir: String): Path =
+    Paths.get(s"$stateDir/_n_buckets")
+
+  /** The base bucket count the store was first written with (its
+    * `_n_buckets` pin), or None for a store not written yet. */
+  def pinnedBuckets(stateDir: String): Option[Int] = {
+    val p = pinPath(stateDir)
+    if (!Files.exists(p)) None
+    else {
+      val body = new String(Files.readAllBytes(p), "UTF-8").trim
+      Some(body.toIntOption.getOrElse(throw new IllegalStateException(
+        s"unparseable bucket-count pin $p: '$body'")))
+    }
+  }
 
   private def layoutPath(stateDir: String): Path =
     Paths.get(s"$stateDir/_bucket_doublings")
@@ -452,27 +478,31 @@ object Inventory {
     }
   }
 
-  /** Remove what a torn merge left ABOVE `committed`: its version
-    * leaves with their sidecars, then the doublings it recorded. A
-    * replay may arrive with other batch boundaries than the torn
-    * batch; left in place, a torn version would count as merged, and
-    * a torn split's record would hide every bucket it had not
-    * rewritten yet. Call before the next batch writes anything. */
-  def dropAbove(stateDir: String, committed: Long): Unit = {
+  /** Prepare a replay of the batch `(committed, replayAt]`: remove
+    * what a torn merge left above `committed` at any height other than
+    * `replayAt` — version leaves with their sidecars, and doublings.
+    * Such debris comes from a batch with other boundaries; left in
+    * place, a torn version would be read as prior state or shadow the
+    * replay's own version. What a torn merge left AT `replayAt` came
+    * from this same batch, so it stays: the per-bucket replay guard
+    * resumes it, redoing only the buckets (or, after a recorded
+    * doubling, the split's new buckets) that have no version there.
+    * Call before the batch writes anything. */
+  def dropAbove(stateDir: String, committed: Long, replayAt: Long): Unit = {
+    def torn(h: Long) = h > committed && h != replayAt
     bucketVersions(stateDir).foreach { case (bk, vs) =>
-      dropVersions(stateDir, bk, vs, vs.filter(_ > committed))
+      dropVersions(stateDir, bk, vs, vs.filter(torn))
     }
     // and a sidecar whose data write never landed
     val fp = Paths.get(s"$stateDir/_fp")
     if (Files.isDirectory(fp)) Fs.ls(fp).foreach { p =>
       p.getFileName.toString.stripSuffix(".json") match {
-        case StatePartIdRe(_, mh) if mh.toLong > committed =>
-          Files.delete(p)
+        case StatePartIdRe(_, mh) if torn(mh.toLong) => Files.delete(p)
         case _ =>
       }
     }
     val splits = doublings(stateDir)
-    val kept = splits.filter(_ <= committed)
+    val kept = splits.filterNot(torn)
     if (kept.isEmpty) Files.deleteIfExists(layoutPath(stateDir))
     else if (kept.size < splits.size)
       Fs.writeAtomic(layoutPath(stateDir), renderDoublings(kept))

@@ -101,6 +101,14 @@ object BlockIngest {
   private val inventoryTables = Seq("actor_inventory", "gateway_inventory",
     "validator_inventory", "account_inventory", "oui_inventory")
 
+  /** An inventory store's base bucket count: a fresh store starts at
+    * one bucket and doubles it as it grows (Inventory.mergeBucketedBy).
+    * A store keeps the base its pin records, so a sink first written
+    * under another base (64, and 16 for oui_inventory, before the
+    * count followed the state's size) is extended under its own. */
+  private def baseBuckets(store: String): Int =
+    Inventory.pinnedBuckets(store).getOrElse(1)
+
   // ---- fact layout: height buckets, pinned per sink ----
 
   /** Default height-bucket width: how many consecutive block heights
@@ -256,13 +264,11 @@ object BlockIngest {
     val committed = committedHeight(sinkDir)
     val k = ensureLayout(sinkDir, bucketBlocks)
     // recovery strictly before any write: restore a torn compaction
-    // and remove torn slices and inventory versions a crashed batch
-    // left above the watermark (they would become VISIBLE once the
-    // watermark passes them, whatever the replay's batch boundaries)
+    // and remove torn slices a crashed batch left above the watermark
+    // (they would become VISIBLE once the watermark passes them,
+    // whatever the replay's batch boundaries)
     recoverFactCompaction(sinkDir)
     cleanTornSlices(sinkDir, committed)
-    inventoryTables.foreach(t =>
-      Inventory.dropAbove(s"$sinkDir/$t", committed))
     // replay filter: already-committed heights are dropped (idempotence)
     val fresh = batch.filter(col("height") > committed).cache()
     try {
@@ -310,6 +316,11 @@ object BlockIngest {
         case _ =>
       }
       val newCommitted = heights.last
+      // inventory versions a crashed batch left above the watermark:
+      // those of a batch with other boundaries go, those at this
+      // batch's own height stay for the per-bucket replay guard
+      inventoryTables.foreach(t =>
+        Inventory.dropAbove(s"$sinkDir/$t", committed, newCommitted))
 
       // Concurrent phase scheduling: within each phase every write
       // lands in files no earlier manifest references and no two
@@ -472,10 +483,11 @@ object BlockIngest {
     // buckets its actors hash into — O(touched) per batch, not
     // O(state) — with a per-bucket replay guard (exactly-once per
     // bucket even across a crash mid-write)
-    Inventory.mergeBucketedState(spark, s"$sinkDir/actor_inventory",
+    val invDir = s"$sinkDir/actor_inventory"
+    Inventory.mergeBucketedState(spark, invDir,
       batchActors, Seq("actor"), "block", Seq("actor_role"),
       touch = Some("updated_at" -> timestamp_seconds(lit(batchTime))),
-      nBuckets = 1, mergedHeight = newCommitted)
+      nBuckets = baseBuckets(invDir), mergedHeight = newCommitted)
   }
 
   /** gateway_inventory — the reference's key trigger-maintained derived
@@ -520,7 +532,7 @@ object BlockIngest {
     Inventory.mergeBucketedState(spark, invDir, rows, Seq("address"), "ver",
       cols, coalesceCols,
       touch = Some("updated_at" -> timestamp_seconds(lit(batchTime))),
-      nBuckets = 1, mergedHeight = newCommitted)
+      nBuckets = baseBuckets(invDir), mergedHeight = newCommitted)
   }
 
   /** validator_inventory — same trigger-upsert pattern for the validator
@@ -573,7 +585,7 @@ object BlockIngest {
     Inventory.mergeBucketedState(spark, invDir, rows, Seq("address"), "ver",
       cols, co,
       touch = Some("updated_at" -> timestamp_seconds(lit(batchTime))),
-      nBuckets = 1, mergedHeight = newCommitted)
+      nBuckets = baseBuckets(invDir), mergedHeight = newCommitted)
   }
 
   /** account_inventory — balances per account rolled forward per batch
@@ -588,8 +600,10 @@ object BlockIngest {
     // bucketed by address: the balance fold is additive, so the
     // per-bucket replay guard is load-bearing (a double fold would
     // double-count) — exactly-once per bucket across crashes
-    Inventory.mergeBucketedBy(spark, s"$sinkDir/account_inventory",
-      AccountLedger.deltas(txns), Seq("address"), 1, newCommitted) {
+    val invDir = s"$sinkDir/account_inventory"
+    Inventory.mergeBucketedBy(spark, invDir,
+      AccountLedger.deltas(txns), Seq("address"),
+      baseBuckets(invDir), newCommitted) {
       case (None, d) => AccountLedger.finish(AccountLedger.fold(d))
       case (Some(st), d) => AccountLedger.merge(st, AccountLedger.fold(d))
     }
@@ -603,8 +617,10 @@ object BlockIngest {
     */
   private def mergeOuiInventory(spark: SparkSession, sinkDir: String,
                                 newCommitted: Long, txns: DataFrame): Unit = {
-    Inventory.mergeBucketedBy(spark, s"$sinkDir/oui_inventory",
-      OuiLedger.rows(txns), Seq("oui"), 1, newCommitted) {
+    val invDir = s"$sinkDir/oui_inventory"
+    Inventory.mergeBucketedBy(spark, invDir,
+      OuiLedger.rows(txns), Seq("oui"),
+      baseBuckets(invDir), newCommitted) {
       case (None, r) => OuiLedger.finish(OuiLedger.fold(r))
       case (Some(st), r) => OuiLedger.merge(st, OuiLedger.fold(r))
     }

@@ -127,23 +127,27 @@ class CommittedParquetSpec extends SparkSpec {
   }
 
   test("readCommitted of a 64-bucket inventory runs exactly one job") {
-    // 1001 distinct actors merged at a 64-bucket base count: every
-    // bucket holds state, so the read names far more files than the 32
-    // paths above which spark.read lists in a Spark job. The files are
-    // read the way readCommitted reads a manifest's list: through
-    // CommittedParquet with the store root as base
-    val store = Files.createTempDirectory("committed_parquet_64")
-      .toString + "/actor_inventory"
-    val actors = (("p0", 1L) +: (1 to 1000).map(i => (s"a$i", 1L)))
-      .toDF("actor", "block")
-    assert(graft.ops.Inventory.mergeBucketedState(spark, store, actors,
-      Seq("actor"), "block", Seq.empty, nBuckets = 64, mergedHeight = 1L))
-    val buckets = graft.ops.Fs.ls(Paths.get(store))
+    // one block paying 1000 distinct payees into a sink whose
+    // actor_inventory is pinned at a 64-bucket base: every actor bucket
+    // holds state, so the read names far more files than the 32 paths
+    // above which spark.read lists in a Spark job
+    val store = Files.createTempDirectory("committed_parquet_64").toString
+    Files.createDirectories(Paths.get(s"$store/actor_inventory"))
+    Files.write(Paths.get(s"$store/actor_inventory/_n_buckets"),
+      "64".getBytes("UTF-8"))
+    val txns = (1 to 1000).map(i =>
+      s"""{"hash":"t$i","type":"payment_v1",""" +
+        s""""fields":{"payer":"p0","payee":"a$i","amount":1}}""")
+    BlockIngest.processBatch(spark, spark.read
+      .schema(BlockIngest.blockSchema).json(Seq(
+        """{"height":1,"time":1000,"block_hash":"h1","prev_hash":"h0",""" +
+          txns.mkString(""""transactions":[""", ",", "]}")).toDS()), store)
+    val buckets = graft.ops.Fs.ls(Paths.get(s"$store/actor_inventory"))
       .count(_.getFileName.toString.startsWith("bucket="))
     assert(buckets === 64)
     val listed = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
-    val (rows, jobs) = jobsOf(CommittedParquet.read(spark,
-      graft.ops.Inventory.liveFiles(store, 1L), Some(store)).collect())
+    val (rows, jobs) = jobsOf(
+      BlockIngest.readCommitted(spark, store, "actor_inventory").collect())
     assert(rows.length === 1001)
     assert(jobs === 1, "the scan's own job and nothing before it")
     assert(HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount === listed,

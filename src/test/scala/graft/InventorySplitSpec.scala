@@ -8,14 +8,15 @@ import java.nio.file.{Files, Path, Paths}
 
 /** A bucketed inventory store starts at its base bucket count and
   * doubles it once its live bytes per bucket pass
-  * [[Inventory.SplitTargetBytes]]. Each row carries ~64 KB of base64
-  * over random bytes, which neither snappy nor dictionary encoding
-  * shrinks, so a few dozen rows cross the target. */
+  * [[Inventory.SplitTargetBytes]]. Each row carries base64 over random
+  * bytes, which neither snappy nor dictionary encoding shrinks, sized
+  * at 1/64 of the target: 80 rows fill one bucket to 1.25 targets. */
 class InventorySplitSpec extends SparkSpec {
   import spark.implicits._
 
   private def pad(seed: Long): String = {
-    val b = new Array[Byte](48 * 1024)
+    // 3/4 of the base64 text, which is 1/64 of the target
+    val b = new Array[Byte]((Inventory.SplitTargetBytes * 3 / 256).toInt)
     new scala.util.Random(seed).nextBytes(b)
     java.util.Base64.getEncoder.encodeToString(b)
   }
@@ -64,7 +65,7 @@ class InventorySplitSpec extends SparkSpec {
   private lazy val b30 = rows(ks(100 to 159), 30L)
   private lazy val b40 = rows(ks(0 to 9), 40L)
 
-  /** Four merges: 80 rows (~5 MB, one bucket) → a split to 2 at 20 →
+  /** Four merges: 80 rows (1.25 targets, one bucket) → a split to 2 at 20 →
     * 160 rows in 2 buckets at 30 → a split to 4 at 40. Not vacuumed. */
   private lazy val chain: String = {
     val dir = freshStore("split_chain")
@@ -130,13 +131,18 @@ class InventorySplitSpec extends SparkSpec {
   test("a bucket a split leaves empty never resurfaces") {
     // keys that all land in bucket 1 of 2: the split at 20 leaves
     // bucket 0 with no rows, beside its pre-split version
-    val odd = (0 until 400).map(i => s"e$i").toDF("key")
-      .filter(pmod(xxhash64(col("key")), lit(2)) === 1)
-      .as[String].collect().toSeq.take(80)
+    val byParity = (0 until 400).map(i => s"e$i").toDF("key")
+      .withColumn("p", pmod(xxhash64(col("key")), lit(2)))
+      .as[(String, Long)].collect().toSeq
+    val odd = byParity.collect { case (k, 1L) => k }.take(80)
+    val even = byParity.collect { case (k, 0L) => k }.take(5)
     assert(odd.size === 80)
     val dir = freshStore("split_empty")
-    val (e10, e20, e30) =
-      (rows(odd, 10L), rows(odd.take(10), 20L), rows(odd.slice(10, 15), 30L))
+    // the merge at 30 touches bucket 1 (past the target) and the empty
+    // bucket 0: their mean stays under the target, so no split, and
+    // bucket 0's prior state is empty — not its pre-split version
+    val (e10, e20, e30) = (rows(odd, 10L), rows(odd.take(10), 20L),
+      rows(odd.slice(10, 15) ++ even, 30L))
     assert(merge(dir, e10, 10L))
     assert(merge(dir, e20, 20L))
     assert(Inventory.doublings(dir) === Seq(20L))
@@ -144,15 +150,19 @@ class InventorySplitSpec extends SparkSpec {
     assert(Inventory.liveVersions(dir, 20L) === Seq(1 -> 20L))
     assertSameRows(Inventory.readBucketedStateAt(spark, dir, 20L),
       fold(e10, e20))
+    val at20 = copyStore(dir)
+    Inventory.vacuumBucketedState(at20, 20L)
+    assert(!Files.exists(Paths.get(at20, "bucket=0")),
+      "the emptied bucket goes with its last version")
     assert(merge(dir, e30, 30L))
-    assert(Inventory.liveVersions(dir, 30L) === Seq(1 -> 30L))
+    assert(Inventory.doublings(dir) === Seq(20L))
+    assert(Inventory.liveVersions(dir, 30L) === Seq(0 -> 30L, 1 -> 30L))
     assertSameRows(Inventory.readBucketedState(spark, dir),
       fold(e10, e20, e30))
     // the pre-split height still reads its own state until vacuum
     assertSameRows(Inventory.readBucketedStateAt(spark, dir, 10L), fold(e10))
     Inventory.vacuumBucketedState(dir, 30L)
-    assert(!Files.exists(Paths.get(dir, "bucket=0")),
-      "the emptied bucket goes with its last version")
+    assert(leaves(dir) === Set(0 -> 30L, 1 -> 30L))
     assertSameRows(spark.read.parquet(dir).drop("bucket", "merged_height"),
       fold(e10, e20, e30))
   }
@@ -209,6 +219,10 @@ class InventorySplitSpec extends SparkSpec {
     assert(leaves(dir) === Set(0 -> 10L), "no split data landed")
     // the last committed state still reads under the base count
     assert(Inventory.readBucketedStateAt(spark, dir, 10L).count() === 80L)
+    // what processBatch does before a replay of the same batch
+    Inventory.dropAbove(dir, 10L, 20L)
+    assert(Inventory.doublings(dir) === Seq(20L),
+      "the replay's own doubling stays")
     assert(additive(dir, a20, 20L))
     assert(balances(dir) === noCrash)
     assert(!additive(dir, a20, 20L), "a second replay is a no-op")
@@ -225,6 +239,9 @@ class InventorySplitSpec extends SparkSpec {
     val kept = Files.getLastModifiedTime(
       dataFiles(s"$dir/bucket=0/merged_height=20").head)
     Fs.deleteRec(gone)
+    Inventory.dropAbove(dir, 10L, 20L)
+    assert(leaves(dir) === Set(0 -> 10L, 0 -> 20L),
+      "the replay's own height stays for the per-bucket guard")
     assert(additive(dir, a20, 20L))
     assert(Files.isDirectory(gone), "the missing bucket is redone")
     assert(Files.getLastModifiedTime(
@@ -240,11 +257,11 @@ class InventorySplitSpec extends SparkSpec {
     assert(additive(dir, a20, 20L))
     // torn: the split at 20 rewrote bucket 0 but not bucket 1
     Fs.deleteRec(Paths.get(dir, "bucket=1", "merged_height=20"))
-    Inventory.dropAbove(dir, 10L)
+    // the replay arrives as ONE batch through height 30
+    Inventory.dropAbove(dir, 10L, 30L)
     assert(Inventory.doublings(dir).isEmpty)
     assert(leaves(dir) === Set(0 -> 10L))
     assert(ArtifactStore.readFpParts(dir).map(_._1) === Seq("bucket=0.mh=10"))
-    // the replay arrives as ONE batch through height 30
     val a30 = amounts(ks(100 to 139), 100L, 30L)
     assert(additive(dir, a20.union(a30), 30L))
     val want = Seq(ks(0 to 79) -> 1L, ks(40 to 119) -> 10L,
