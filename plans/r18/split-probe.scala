@@ -34,15 +34,15 @@ object SplitProbe {
       System.setProperty("graft.splitTarget", target)
       val dir = root.resolve(s"$label-$nRows").toString
       var next = nRows
-      def batch(ids: Seq[Long], h: Long): DataFrame = ids.toDF("id").select(
+      def batch(ids: DataFrame, h: Long): DataFrame = ids.select(
         sha2(col("id").cast("string"), 256).as("actor"),
         (lit(h * 10000000L) + col("id") % 10000000L).as("block"),
         element_at(array(lit("payer"), lit("payee"), lit("gateway")),
           (pmod(col("id"), lit(3L)) + 1).cast("int")).as("actor_role"))
-      def keys(old: Int, fresh: Int): Seq[Long] = {
+      def keys(old: Int, fresh: Int): DataFrame = {
         val o = Seq.fill(old)((rnd.nextDouble() * next).toLong).distinct
         val f = (next until next + fresh).toSeq; next += fresh
-        o ++ f
+        (o ++ f).toDF("id")
       }
       def buckets = Files.list(Paths.get(dir)).iterator().asScala
         .count(_.getFileName.toString.startsWith("bucket="))
@@ -71,9 +71,10 @@ object SplitProbe {
         val out = new java.io.FileWriter(outPath, true)
         out.write(line + "\n"); out.close()
       }
-      // the initial state in one merge, then small merges until the
-      // layout stops changing
-      merge(batch(0L until nRows, 1L), "build")
+      // the initial state in one merge (spark.range: a local Seq of
+      // millions of ids exhausts a 3 GB driver heap), then small merges
+      // until the layout stops changing
+      merge(batch(spark.range(nRows).toDF("id"), 1L), "build")
       var before = -1
       while (before != buckets && h < 14) { before = buckets; merge(batch(keys(20, 5), h + 1), "settle") }
       (1 to 30).foreach(_ => merge(batch(keys(20, 5), h + 1), "follow"))

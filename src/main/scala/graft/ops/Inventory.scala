@@ -131,12 +131,13 @@ object Inventory {
 
   /** Live parquet bytes per touched bucket past which a merge doubles
     * the store's bucket count. Each bucket a batch touches is
-    * rewritten whole, so the target bounds a follower's per-commit
-    * rewrite per touched key, while the count of files a backfill
-    * commit writes follows the state's size instead of a fixed fan-out.
-    * Of the targets measured against the fixed 64 buckets on 5–86 MB
+    * rewritten whole, so a follower rewrites up to about the target
+    * per touched key, while the count of files a backfill commit
+    * writes follows the state's size instead of a fixed fan-out.
+    * Of the targets measured against the fixed 64 buckets on 5–233 MB
     * stores (256 KiB to 4 MiB, plans/r18/split-target.md), 4 MiB had
-    * the smallest worst ratio over follow and backfill merges.
+    * the smallest worst ratio over follow and backfill merges; its
+    * loss is follow on stores of 32 buckets (1.25× at 117 MB).
     */
   val SplitTargetBytes: Long = 4L << 20
 
